@@ -100,12 +100,15 @@ def main(argv: list[str] | None = None) -> int:
             thresholds=thresholds,
             b64_outputs=args.b64_outputs,
         )
+        # count the written sinks (parquet footers): the job released its
+        # cached frames, so counting res.* would rerun the pipeline
+        n = lambda sink: spark.read.parquet(f"{args.output}/{sink}").count()
         print(
             f"bidlog job done: {res.metrics.get('n_input')} logs in"
             f" ({res.metrics.get('n_dropped')} dropped by validation),"
-            f" {res.device_profiles.count()} device profiles,"
-            f" {res.app_profiles.count()} app profiles,"
-            f" {res.suspicious.count()} suspicious -> {args.output}"
+            f" {n('device_profiles')} device profiles,"
+            f" {n('app_profiles')} app profiles,"
+            f" {n('suspicious')} suspicious -> {args.output}"
         )
     elif args.job == "export":
         from .functions.export import export_training_shards
@@ -570,10 +573,13 @@ def main(argv: list[str] | None = None) -> int:
 
         dp = spark.read.parquet(f"{args.profiles}/device_profiles")
         susp = spark.read.parquet(f"{args.profiles}/suspicious")
-        preds = run_prediction_job(
+        run_prediction_job(
             spark, dp, susp, load_iapp(spark, args.sf_dir), output_dir=args.output
         )
-        print(f"prediction job done: {preds.count()} predictions -> {args.output}")
+        # the written sink, not the returned frame: counting that would
+        # rerun inference
+        n_preds = spark.read.parquet(f"{args.output}/predictions").count()
+        print(f"prediction job done: {n_preds} predictions -> {args.output}")
     return 0
 
 

@@ -7,6 +7,15 @@ Combine.perKey) become Spark hash aggregations with automatic partial
 aggregation; the popular-apps side input becomes a broadcast join inside
 suspicious_ids. Outputs are written partitioned (parquet) plus optional
 Base64-text for format fidelity.
+
+Persist once, release on exit: Beam materialises the DeviceProfile
+PCollection once and fans it out to every consumer; a lazy Spark plan
+would instead recompute it for each action (the tripwire, three sinks).
+The job therefore holds the device profiles and the app profiles
+(``functions/_cache.hold``), so the input is read once per run, and
+releases everything it registered, the skew router's probe frames
+included, before it returns. A long-lived session keeps nothing cached;
+the returned frames stay lazy and recompute if evaluated again.
 """
 
 from __future__ import annotations
@@ -17,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions._cache import hold, registry_mark, release_cached_from
 from ..operators.app_profile import app_profiles
 from ..operators.device_profile import device_profiles
 from ..operators.suspicious import SuspiciousThresholds, suspicious_ids
@@ -29,7 +39,7 @@ class BidLogJobResult:
     device_profiles: DataFrame
     app_profiles: DataFrame
     suspicious: DataFrame
-    # single-pass job counters (Observation / CollectMetrics): populated
+    # single-pass job counters (Observation / CollectMetrics): read
     # after the device-profiles write when output_dir is set, else {}
     metrics: dict = field(default_factory=dict)
 
@@ -46,29 +56,37 @@ def run_bidlog_job(
     reference's Base64-text format next to them.
 
     Observability: the validity filter's admit/drop counts ride the
-    device-profiles write as an `Observation` (Spark's CollectMetrics) —
-    ONE pass computes outputs AND counters, where a naive job would run a
-    second count() scan over the input for its log line. At 100 TB that
-    second scan is real money; observed metrics are free riders on the
-    action that runs anyway."""
+    action that fills the device-profiles cache (the duplicate tripwire)
+    as an `Observation` (Spark's CollectMetrics) — ONE pass computes
+    outputs AND counters, where a naive job would run a second count()
+    scan over the input for its log line. At 100 TB that second scan is
+    real money; observed metrics are free riders on the action that runs
+    anyway."""
     obs = Observation("bidlog_validation")
     observed = bid_logs.observe(
         obs,
         F.count(F.lit(1)).alias("n_input"),
         F.sum(is_valid_bidlog().cast("long")).alias("n_valid"),
     )
-    dp = device_profiles(valid_bid_logs(observed))
-    aps = app_profiles(dp)  # includes the duplicate-ID tripwire (A2)
-    susp = suspicious_ids(dp, aps, thresholds)
+    mark = registry_mark()
+    try:
+        dp = hold(device_profiles(valid_bid_logs(observed)))
+        # app_profiles runs the duplicate-ID tripwire (A2) eagerly: the
+        # job's first action, which fills dp's cache before any sink
+        aps = hold(app_profiles(dp))
+        susp = suspicious_ids(dp, aps, thresholds)
 
-    metrics: dict = {}
-    if output_dir:
-        dp.write.mode("overwrite").parquet(os.path.join(output_dir, "device_profiles"))
-        metrics = dict(obs.get)
-        metrics["n_dropped"] = metrics["n_input"] - metrics["n_valid"]
-        aps.write.mode("overwrite").parquet(os.path.join(output_dir, "app_profiles"))
-        susp.write.mode("overwrite").parquet(os.path.join(output_dir, "suspicious"))
-        if b64_outputs:
-            write_b64_text(susp, os.path.join(output_dir, "suspicious_b64"))
+        metrics: dict = {}
+        if output_dir:
+            out = lambda name: os.path.join(output_dir, name)
+            dp.write.mode("overwrite").parquet(out("device_profiles"))
+            metrics = dict(obs.get)
+            metrics["n_dropped"] = metrics["n_input"] - metrics["n_valid"]
+            aps.write.mode("overwrite").parquet(out("app_profiles"))
+            susp.write.mode("overwrite").parquet(out("suspicious"))
+            if b64_outputs:
+                write_b64_text(susp, out("suspicious_b64"))
+    finally:
+        release_cached_from(mark)
 
     return BidLogJobResult(dp, aps, susp, metrics)

@@ -6,6 +6,12 @@ maps to ``df.write.format("bigquery")`` via the PUBLIC
 spark-bigquery-connector when it is on the classpath (availability-probed
 — it is not baked into this container), with an overwrite parquet + JSON
 write of the same 4-column frame as the always-available fallback.
+
+Persist once, release on exit: the predictions frame (which ends in the
+Arrow ``mapInPandas`` inference) is held across all of its sinks, so
+inference runs once per job rather than once per sink. Everything the job
+registers with ``functions/_cache``, the skew router's probe frames
+included, is released before it returns; the returned frame stays lazy.
 """
 
 from __future__ import annotations
@@ -14,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions._cache import hold, registry_mark, release_cached_from
 from ..operators.app_profile import assert_unique_device_ids
 from ..operators.features import feature_inputs
 from ..operators.inference import predict
@@ -83,9 +90,12 @@ def run_prediction_job(
     (os, uuid, prediction, score, model_id)."""
     # duplicate-ID tripwire on the re-read profiles (Features.java:81-87)
     assert_unique_device_ids(device_profiles)
-    preds = predict(feature_inputs(device_profiles, suspicious, iapp))
-
-    if output_dir or bq_table:
-        sink_predictions(preds, output_dir, bq_table)
+    mark = registry_mark()
+    try:
+        preds = hold(predict(feature_inputs(device_profiles, suspicious, iapp)))
+        if output_dir or bq_table:
+            sink_predictions(preds, output_dir, bq_table)
+    finally:
+        release_cached_from(mark)
 
     return preds

@@ -164,8 +164,9 @@ class AntiJoinRouting:
 
 # session-scoped probe memos; never cross JVMs, so a fresh session always
 # re-probes. Two tiers:
-#   exact — semanticHash + sameSemantics-confirmed: reuses the held key
-#     frame AND its count (a confirmed-equal plan IS the same key set);
+#   exact — semanticHash + sameSemantics-confirmed: reuses the count (a
+#     confirmed-equal plan IS the same key set) and holds the caller's
+#     plan, which the CacheManager serves from any still-cached equal one;
 #   fingerprint — md5 of the normalized plan's JSON expression tree with
 #     ExprId nodes erased: Spark does NOT normalize attr IDs inside
 #     CTE-bearing plans (CTERelationRef), so two identical constructions
@@ -289,9 +290,11 @@ def _probed_key_count(dim_keys: DataFrame) -> tuple[DataFrame, int, str]:
     h = (dim_keys.semanticHash(), src)
     hit = _PROBE_MEMO.get(h)
     if hit is not None and dim_keys.sameSemantics(hit[0]):
-        # re-hold: the inter-query cache hygiene may have unpersisted the
-        # frame; persisting an already-persisted frame is a no-op
-        return hold(hit[0]), hit[1], "memo"
+        # hold the CALLER's plan, not the memoized frame: the memoized
+        # plan may carry an earlier job's Observation, and joining it into
+        # this one would name that metric twice (DUPLICATED_METRICS_NAME).
+        # The CacheManager's sameResult lookup still serves cached keys.
+        return hold(dim_keys), hit[1], "memo"
     # a fresh probe supersedes any entries for the SAME plan over OLDER
     # source files: without eviction each fixture rewrite in a long
     # session leaks a retained DataFrame handle plus its stale count

@@ -342,8 +342,10 @@ class _Reader:
         ln = self.read_varint(mask).view(np.int64)
         ok = mask & ~self.bad
         start = self.pos.copy()
-        # ln < 0 = a length >= 2^63 (int64 view): always exceeds any limit
-        over = ok & ((ln < 0) | (self.pos + ln > limit))
+        # ln < 0 = a length >= 2^63 (int64 view): always exceeds any limit.
+        # Compare against the room left, never pos + ln: a 9-byte length
+        # near 2^63 - 1 would wrap that sum negative and pass the check.
+        over = ok & ((ln < 0) | (ln > limit - self.pos))
         self.bad |= over
         adv = ok & ~over
         self.pos[adv] += ln[adv]

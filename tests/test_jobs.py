@@ -57,6 +57,60 @@ def test_prediction_job_end_to_end(spark, logs, tmp_path):
     assert json_lines == 3
 
 
+def test_bidlog_job_reruns_on_unchanged_file_backed_input(spark, logs, tmp_path):
+    """Two BidLogJob runs over the same TFRecord shards in one session:
+    the second run's skew-router probe hits the exact-tier memo, and must
+    hold its own plan rather than the first run's key frame, whose plan
+    carries the first run's Observation (DUPLICATED_METRICS_NAME)."""
+    from adtech_log_data_pipeline_spark.sources.protowire import (
+        BID_LOG,
+        BID_LOG_SQL_SCHEMA,
+        bidlog_to_row,
+        encode_wire_proto,
+        row_to_bidlog,
+    )
+    from adtech_log_data_pipeline_spark.sources.tfrecord import (
+        read_tfrecord_proto,
+        write_tfrecord_partitioned,
+    )
+
+    shards = str(tmp_path / "shards")
+    write_tfrecord_partitioned(encode_wire_proto(logs, BID_LOG, row_to_bidlog), shards)
+    for run in ("a", "b"):
+        decoded = read_tfrecord_proto(
+            spark, f"{shards}/*.tfrecord.gz", BID_LOG, BID_LOG_SQL_SCHEMA, bidlog_to_row
+        )
+        res = run_bidlog_job(spark, decoded, output_dir=str(tmp_path / run))
+        assert res.metrics["n_input"] == 22 and res.metrics["n_valid"] == 21
+        assert spark.read.parquet(str(tmp_path / run / "suspicious")).count() == 1
+
+
+def test_jobs_release_their_cached_frames(spark, logs, tmp_path):
+    """Each job persists its shared intermediates only for its own run: a
+    long-lived session is left with the registry and the persistent RDDs
+    it had before, and the returned frames still evaluate."""
+    from adtech_log_data_pipeline_spark.functions import _cache
+
+    def footprint():
+        return len(_cache._HELD), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = footprint()
+    res = run_bidlog_job(spark, logs, output_dir=str(tmp_path / "bidlog"))
+    iapp = spark.createDataFrame(
+        [("app.0", 5, 100)], "bundle string, num_purchasers long, total_amount long"
+    )
+    preds = run_prediction_job(
+        spark,
+        spark.read.parquet(str(tmp_path / "bidlog" / "device_profiles")),
+        spark.read.parquet(str(tmp_path / "bidlog" / "suspicious")),
+        iapp,
+        output_dir=str(tmp_path / "prediction"),
+    )
+    assert footprint() == before
+    assert res.device_profiles.count() == 4 and res.suspicious.count() == 1
+    assert preds.count() == 3
+
+
 def test_b64_codec_roundtrip_drops_malformed(spark, tmp_path):
     df = spark.createDataFrame([("ANDROID", "U1"), ("IOS", "U2")], "os string, uuid string")
     path = str(tmp_path / "b64")
@@ -130,6 +184,32 @@ def test_export_job_cli_end_to_end(spark, tmp_path):
         "val",
         "test",
     }
+
+
+def test_bidlog_and_prediction_cli_report_sink_counts(spark, tmp_path, capsys):
+    """--job bidlog then --job prediction over the default --sf-dir: the
+    summary lines report the row counts of the sinks just written."""
+    import re
+
+    from adtech_log_data_pipeline_spark.__main__ import main
+
+    bid, pred = str(tmp_path / "b"), str(tmp_path / "p")
+    # thresholds loose enough that some devices survive to the predictions
+    loose = ["--threshold-geo", "30", "--threshold-bid", "1000"]
+    assert main(["--job", "bidlog", "--output", bid, *loose]) == 0
+    assert main(["--job", "prediction", "--profiles", bid, "--output", pred]) == 0
+    out = capsys.readouterr().out
+    rows = lambda d, sink: spark.read.parquet(f"{d}/{sink}").count()
+    m = re.search(
+        r"(\d+) device profiles, (\d+) app profiles, (\d+) suspicious", out
+    )
+    assert m and tuple(map(int, m.groups())) == (
+        rows(bid, "device_profiles"),
+        rows(bid, "app_profiles"),
+        rows(bid, "suspicious"),
+    )
+    m = re.search(r"prediction job done: (\d+) predictions", out)
+    assert m and int(m.group(1)) == rows(pred, "predictions") > 0
 
 
 def test_read_jsonl_fuzzed_garbage_lines(spark, tmp_path):

@@ -372,28 +372,3 @@ def test_rebuild_evicts_seed_matrix_memo(spark, tmp_path):
     assert not np.array_equal(first[1], second[1]), (
         "stale seed-matrix memo served after a same-dir rebuild"
     )
-
-
-def test_rebuild_evicts_seed_matrix_memo(spark, tmp_path):
-    """Rebuilding an index INTO THE SAME DIRECTORY within one session
-    must not serve the old build's memoized coarse-quantizer matrix
-    (r13 ADVICE #1: commit_index_build resets the manifest version to 1,
-    so the memo key must rotate on something else -- the manifest file's
-    mtime_ns)."""
-    from adtech_log_data_pipeline_spark.functions.similarity import (
-        build_pq_index,
-        load_pq_index,
-    )
-
-    build_pq_index(_df(spark, _vecs(n=24, seed=41)), str(tmp_path),
-                   m=M, n_codes=K, n_lists=4)
-    first = load_pq_index(spark, str(tmp_path)).seed_matrix()
-
-    # overwrite-rebuild with DIFFERENT embeddings -- same dir, version 1
-    build_pq_index(_df(spark, _vecs(n=24, seed=42)), str(tmp_path),
-                   m=M, n_codes=K, n_lists=4)
-    second = load_pq_index(spark, str(tmp_path)).seed_matrix()
-
-    assert not np.array_equal(first[1], second[1]), (
-        "stale seed-matrix memo served after a same-dir rebuild"
-    )

@@ -177,6 +177,20 @@ def test_decode_bidlog_rows_noncanonical_and_malformed():
     assert got == want
 
 
+def test_decode_bidlog_rows_len_near_int64_max_drops_one_row():
+    """A 9-byte LEN varint of 2^63 - 1 nested in bid_request is positive
+    as int64, so only an overflow-safe bound (length against the room
+    left, never cursor + length) catches it: the batch must drop exactly
+    the row the scalar decoder drops, not fail with IndexError."""
+    good = _scalar_encode([_rand_row(random.Random(11))])[0]
+    evil = b"\x0a\x0a\x0a" + b"\xff" * 8 + b"\x7f"  # bid_request { id: len 2^63-1 }
+    payloads = [good, evil, good]
+    got = _cols_to_rows(decode_bidlog_rows(payloads))
+    want = _scalar_decode(payloads)
+    assert len(want) == 2
+    assert got == want
+
+
 def test_crc32c_many_parity_and_skew():
     rng = random.Random(5)
     payloads = [b"", b"\x00"]
