@@ -12,7 +12,7 @@ from .app_profile import (
     flatten_app_profiles,
 )
 from .suspicious import SuspiciousThresholds, suspicious_ids, suspicious_ids_from_valid
-from .features import feature_inputs, feature_inputs_from_valid
+from .features import feature_inputs
 from .tripwire import CorruptedDataError, assert_valid_device_profiles
 
 __all__ = [
@@ -30,7 +30,6 @@ __all__ = [
     "suspicious_ids",
     "suspicious_ids_from_valid",
     "feature_inputs",
-    "feature_inputs_from_valid",
     "CorruptedDataError",
     "assert_valid_device_profiles",
 ]

@@ -43,15 +43,14 @@ def assert_unique_device_ids(profiles: DataFrame) -> None:
         )
 
 
-def app_profiles(profiles: DataFrame, check_duplicates: bool = True) -> DataFrame:
+def app_profiles(profiles: DataFrame) -> DataFrame:
     """AppProfile per bundle: user_count (distinct devices with the app) and
     user_count_per_exchange (distinct devices whose app activity includes
     the exchange). Output schema (FIXTURES.md / profile.proto:130-145):
       bundle string, user_count int,
       user_count_per_exchange map<int,int> (zero entries absent)
     """
-    if check_duplicates:
-        assert_unique_device_ids(profiles)
+    assert_unique_device_ids(profiles)
 
     device_apps = profiles.select(
         "os", "uuid", F.explode("apps").alias("app")

@@ -98,11 +98,10 @@ def feature_pipeline_from_valid(
 ) -> DataFrame:
     """Fused flat-path pipeline: suspicious detection AND feature assembly
     off ONE shared per-device aggregate — a single shuffle over the fact
-    produces (first_at, app_count, geo_cnt, total_bids) for both consumers
-    (separately, suspicious_ids_from_valid and feature_inputs_from_valid
-    each re-aggregate the fact). Output identical to
-    feature_inputs_from_valid(v, suspicious_ids_from_valid(v, t), iapp) —
-    oracle- and test-checked."""
+    produces (first_at, app_count, geo_cnt, total_bids) for both consumers.
+    Output identical to the nested
+    feature_inputs(p, suspicious_ids(p, app_profiles(p), t), iapp) over
+    p = device_profiles(v) — oracle- and test-checked."""
     from .suspicious import SuspiciousThresholds
 
     t = thresholds or SuspiciousThresholds()
@@ -169,64 +168,6 @@ def feature_pipeline_from_valid(
     )
     out = (
         kept.join(matched, ["os", "uuid"], "left")
-        .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
-        .crossJoin(F.broadcast(totals))
-    )
-    return out.select(
-        "os",
-        "uuid",
-        "first_at",
-        "app_count",
-        "intersect_app",
-        "intersect_purchaser",
-        "intersect_amount",
-        (F.col("intersect_app") / (F.lit(1) + F.col("iapp_size"))).alias("f486"),
-        (F.col("intersect_purchaser") / (F.lit(1) + F.col("total_purchasers"))).alias("f586"),
-        (F.col("intersect_app") / (F.lit(1) + F.col("app_count"))).alias("f686"),
-        (F.col("intersect_amount") / (F.lit(1) + F.col("total_amount_sum"))).alias("f777"),
-    )
-
-
-def feature_inputs_from_valid(
-    valid_logs: DataFrame,
-    suspicious: DataFrame,
-    iapp: DataFrame,
-) -> DataFrame:
-    """Scale-optimized formulation of feature_inputs straight from the flat
-    validated rows (same output, oracle-checked): per-device first_at and
-    app_count come from one codegen hash agg, the IAPP intersection from
-    the distinct device-app pairs — no nested arrays anywhere."""
-    from .skew import routed_anti_join
-
-    dev = routed_anti_join(
-        valid_logs.groupBy("os", "uuid").agg(
-            F.min("received_at").alias("first_at"),
-            F.countDistinct("app_bundle").cast("int").alias("app_count"),
-        ),
-        suspicious,
-        ["os", "uuid"],
-    ).filter(F.substring(F.col("uuid"), 8, 1) == "0")
-    device_apps = (
-        valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle"))
-        .distinct()
-        .join(dev.select("os", "uuid"), ["os", "uuid"], "left_semi")
-    )
-    matched = (
-        device_apps.join(F.broadcast(iapp), "bundle", "inner")
-        .groupBy("os", "uuid")
-        .agg(
-            F.count(F.lit(1)).alias("intersect_app"),
-            F.sum("num_purchasers").alias("intersect_purchaser"),
-            F.sum("total_amount").alias("intersect_amount"),
-        )
-    )
-    totals = iapp.agg(
-        F.count(F.lit(1)).alias("iapp_size"),
-        F.coalesce(F.sum("num_purchasers"), F.lit(0)).alias("total_purchasers"),
-        F.coalesce(F.sum("total_amount"), F.lit(0)).alias("total_amount_sum"),
-    )
-    out = (
-        dev.join(matched, ["os", "uuid"], "left")
         .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
         .crossJoin(F.broadcast(totals))
     )

@@ -162,172 +162,6 @@ class AntiJoinRouting:
     n_salts: int = 16
 
 
-# session-scoped probe memos; never cross JVMs, so a fresh session always
-# re-probes. Two tiers:
-#   exact — semanticHash + sameSemantics-confirmed: reuses the count (a
-#     confirmed-equal plan IS the same key set) and holds the caller's
-#     plan, which the CacheManager serves from any still-cached equal one;
-#   fingerprint — md5 of the normalized plan's JSON expression tree with
-#     ExprId nodes erased: Spark does NOT normalize attr IDs inside
-#     CTE-bearing plans (CTERelationRef), so two identical constructions
-#     of the bid-log CTE chain never compare sameSemantics-equal. The
-#     fingerprint tier reuses ONLY the probe COUNT (a routing hint): a
-#     collision could at worst pick a suboptimal rung — every rung is
-#     row-identical by law — never serve a wrong key set, because the
-#     join always builds from the caller's own dim plan.
-# BOTH tiers fold in the scanned source files' size/mtime fingerprint
-# (the _fixture_key discipline), so an in-place rewrite of the lookup's
-# files within a session invalidates the memo instead of serving a stale
-# held frame or count (round-11 ADVICE).
-_PROBE_MEMO: dict[tuple[int, str], tuple[DataFrame, int]] = {}
-_PROBE_FP_MEMO: dict[str, int] = {}
-
-
-def _plan_fingerprint(df: DataFrame) -> str:
-    """md5 of the normalized plan's JSON tree with the two
-    session-global counters erased: every structured ExprId node
-    ({"id": N, "jvmId": ...}) is replaced wholesale, and every
-    NamedLambdaVariable's counter-suffixed name (pyspark's Python-side
-    lambda binder names ``x_1``, ``x_2``, … — a fresh counter value per
-    CONSTRUCTION, verified on Spark 4.1.2) is stripped to its base
-    name. Without the latter, identical lookup plans containing
-    higher-order functions (transform/filter with Python lambdas)
-    never fingerprint-equal and the memo tier silently never hits
-    (round-12 ADVICE). Binder names are alpha-equivalent, so
-    suffix-stripping is semantically sound; the residual
-    nested-shadowing collision (same base name at two depths) is
-    covered by the tier's contract — a collision can only mis-route a
-    rung, never serve wrong rows.
-
-    The JSON form — unlike toString(), where the attribute ref
-    `tag#1` and the string literal 'tag#1' render identically — keeps
-    data literals in a distinct "value" field, so two lookups
-    differing only in a literal can never collide under ID
-    normalization (round-11 ADVICE)."""
-    import hashlib
-    import json
-    import re
-
-    s = df._jdf.queryExecution().normalized().prettyJson()
-    if "LocalRelation" in s or "LogicalRDD" in s or "ExistingRDD" in s:
-        # a driver-local/RDD-backed relation renders WITHOUT its data, so
-        # two different literal key sets would collide — no fingerprint
-        # tier for those (they are test/driver constructs; real lookups
-        # scan files, whose paths the plan JSON carries)
-        return ""
-
-    def norm(o):
-        if isinstance(o, dict):
-            if o.get("product-class", "").endswith(".ExprId"):
-                return "EID"
-            if o.get("class", "").endswith(".NamedLambdaVariable"):
-                o = {
-                    **o,
-                    "name": re.sub(r"_\d+$", "", o.get("name", "")),
-                }
-            return {k: norm(v) for k, v in o.items()}
-        if isinstance(o, list):
-            return [norm(v) for v in o]
-        return o
-
-    canon = json.dumps(norm(json.loads(s)), sort_keys=True)
-    return hashlib.md5(canon.encode()).hexdigest()
-
-
-def _source_files_key(df: DataFrame) -> str:
-    """(path, size, mtime_ns) fingerprint of the plan's scanned files —
-    folded into both probe-memo tiers so a within-session in-place
-    rewrite of the lookup's source files changes the key and forces a
-    fresh probe. Listing leaf files is far cheaper than the count the
-    memo avoids; a non-local/statless path degrades to path-only (still
-    distinct per file set, just not rewrite-sensitive there).
-
-    Files come from the ANALYZED plan's leaves, NOT DataFrame.inputFiles:
-    inputFiles reads the plan AFTER cache substitution, so once the first
-    probe holds the key frame, an identical second lookup resolves to the
-    InMemoryRelation and reports ZERO files — the key would flip and the
-    memo would never hit again for any file-backed lookup (caught by
-    tests/test_skew.py::test_probe_memo_invalidates_on_source_rewrite).
-    The analyzed plan keeps the file relation either way."""
-    import hashlib
-    import os
-    from urllib.parse import urlparse
-
-    files: list[str] = []
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            try:
-                arr = leaf.relation().location().inputFiles()
-            except Exception:
-                continue  # non-file leaf (local relation, RDD, view)
-            files.extend(arr[j] for j in range(len(arr)))
-    except Exception:
-        return "nofiles"
-    if not files:
-        return "nofiles"
-    parts = []
-    for f in sorted(files):
-        p = urlparse(f).path or f
-        try:
-            st = os.stat(p)
-            parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(p)
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()[:16]
-
-
-def _probed_key_count(dim_keys: DataFrame) -> tuple[DataFrame, int, str]:
-    """The routed-join capacity probe: materialize the distinct key
-    projection once (held — the chosen rung's join reads it back from
-    cache instead of recomputing the lookup plan) and count it, memoized
-    per session (see the memo-tier note above). Returns
-    (held keys, count, "fresh"|"memo")."""
-    from ..functions._cache import hold
-
-    src = _source_files_key(dim_keys)
-    h = (dim_keys.semanticHash(), src)
-    hit = _PROBE_MEMO.get(h)
-    if hit is not None and dim_keys.sameSemantics(hit[0]):
-        # hold the CALLER's plan, not the memoized frame: the memoized
-        # plan may carry an earlier job's Observation, and joining it into
-        # this one would name that metric twice (DUPLICATED_METRICS_NAME).
-        # The CacheManager's sameResult lookup still serves cached keys.
-        return hold(dim_keys), hit[1], "memo"
-    # a fresh probe supersedes any entries for the SAME plan over OLDER
-    # source files: without eviction each fixture rewrite in a long
-    # session leaks a retained DataFrame handle plus its stale count
-    # (round-12 ADVICE)
-    for k in [k for k in _PROBE_MEMO if k[0] == h[0] and k[1] != src]:
-        del _PROBE_MEMO[k]
-    fp = _plan_fingerprint(dim_keys)
-    if fp:
-        for k in [
-            k
-            for k in _PROBE_FP_MEMO
-            if k.startswith(f"{fp}:") and k != f"{fp}:{src}"
-        ]:
-            del _PROBE_FP_MEMO[k]
-        fp = f"{fp}:{src}"
-    kdim = hold(dim_keys)
-    if fp:
-        n_fp = _PROBE_FP_MEMO.get(fp)
-        if n_fp is not None:
-            return kdim, n_fp, "memo"
-    n_keys = kdim.count()
-    _PROBE_MEMO[h] = (kdim, n_keys)
-    if fp:
-        _PROBE_FP_MEMO[fp] = n_keys
-    return kdim, n_keys, "fresh"
-
-
-def probe_memo_clear() -> None:
-    """Drop every memoized probe (tests / explicit fixture rewrite)."""
-    _PROBE_MEMO.clear()
-    _PROBE_FP_MEMO.clear()
-
-
 def routed_anti_join(
     facts: DataFrame,
     dim: DataFrame,
@@ -361,49 +195,32 @@ def routed_anti_join(
     shuffle carries one row per distinct key after map-side combine)
     only runs when the lookup has already outgrown broadcast capacity.
 
-    Probe reuse WITHIN a session: the key-count probe is memoized keyed
-    by the lookup plan's semantic fingerprint (``semanticHash`` +
-    ``sameSemantics`` confirm — the same discipline
-    graph_reachability_indexed applies to its on-disk artifact), so a
-    board run whose parity queries share the popular/blacklist key sets
-    pays each probe once per JVM instead of once per query. The memo
-    never crosses sessions — a fresh JVM re-probes, so the
-    probe-is-the-contract rule holds where it matters; a caller-supplied
-    precomputed ``report`` bypass is deliberately NOT offered.
-
-    ``report`` (optional dict) receives {"rung", "n_keys", "skew",
-    "probe"} ("fresh"/"memo") so callers/tests can assert the routing
-    decision. Output is CORRECTNESS-identical across all three rungs
-    (law-tested)."""
+    ``report`` (optional dict) receives {"rung", "n_keys", "skew"} so
+    callers/tests can assert the routing decision. Output is
+    CORRECTNESS-identical across all three rungs (law-tested)."""
     if how not in ("left_anti", "left_semi"):
         raise ValueError("routed_anti_join supports left_anti/left_semi")
     keys = [key] if isinstance(key, str) else list(key)
 
-    kdim, n_keys, probe_src = _probed_key_count(dim.select(*keys).distinct())
+    from ..functions._cache import hold
+
+    # held: the chosen rung's join reads the key set back from cache
+    # instead of recomputing the lookup plan
+    kdim = hold(dim.select(*keys).distinct())
+    n_keys = kdim.count()
     if n_keys <= routing.broadcast_max_keys:
         if report is not None:
-            report.update(
-                {
-                    "rung": "broadcast",
-                    "n_keys": n_keys,
-                    "skew": None,
-                    "probe": probe_src,
-                }
-            )
+            report.update({"rung": "broadcast", "n_keys": n_keys, "skew": None})
         return facts.join(F.broadcast(kdim), keys, how)
     hist = facts.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
     mx, mean = hist.agg(F.max("_n"), F.avg("_n")).first()
     skew = float(mx) / float(mean) if mean else 0.0
     if skew >= routing.skew_factor:
         if report is not None:
-            report.update(
-                {"rung": "salted", "n_keys": n_keys, "skew": skew, "probe": probe_src}
-            )
+            report.update({"rung": "salted", "n_keys": n_keys, "skew": skew})
         return salted_anti_join(facts, kdim, keys, routing.n_salts, how)
     if report is not None:
-        report.update(
-            {"rung": "outer_null", "n_keys": n_keys, "skew": skew, "probe": probe_src}
-        )
+        report.update({"rung": "outer_null", "n_keys": n_keys, "skew": skew})
     hc = _free_col("_hit", facts)
     hit = kdim.withColumn(hc, F.lit(1))
     joined = facts.join(hit, keys, "left_outer")

@@ -12,11 +12,14 @@ sampling, keeping the output hash-stable across sessions.
 
 Results are materialized driver-side (Row-based, vanilla-session-safe — the
 streaming/_replay.py convention) BEFORE the scratch dirs are removed, so the
-returned DataFrame never references deleted files.
+returned DataFrame never references deleted files. The exception is
+``q_tfrecord_parity_check``, whose lazy result reads its scratch shards until
+the next call for the same input replaces them.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 
@@ -357,6 +360,17 @@ def q_tfexample_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
+# sf_dir -> the scratch shards backing the last q_tfrecord_parity_check
+# frame returned for it; each call replaces its predecessor's shards
+_PARITY_SCRATCH: dict[str, str] = {}
+
+
+@atexit.register
+def _drop_parity_scratch() -> None:
+    for work in _PARITY_SCRATCH.values():
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Input-fidelity gate for the reference's ACTUAL ingestion path
     (BidLogJob.java:135: TFRecordIO.read + ProtoCoder): materialize the
@@ -374,11 +388,14 @@ def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     two paths IS the check.
 
     Fully lazy (r14): the profile relation returns as a plain plan over
-    the scratch shards, whose cleanup is deferred to interpreter exit —
-    the old collect() hauled the device×app×exchange-cardinality output
-    to the driver, which GROWS with the corpus (660 k rows / 10-24 s at
-    sf1). A production deployment reads durable TFRecords and never hits
-    the scratch lifecycle at all."""
+    the scratch shards — the old collect() hauled the
+    device×app×exchange-cardinality output to the driver, which GROWS
+    with the corpus (660 k rows / 10-24 s at sf1). The shards live until
+    the next call for the same ``sf_dir`` (or interpreter exit), so a
+    long-lived session keeps at most one corpus copy per input in
+    scratch (a RAM filesystem when /dev/shm is present). A production
+    deployment reads durable TFRecords and never hits the scratch
+    lifecycle at all."""
     from ..operators.device_profile import (
         device_profiles,
         flatten_device_profiles,
@@ -394,6 +411,10 @@ def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.tfrecord import read_tfrecord_proto, write_tfrecord_partitioned
 
+    key = os.path.abspath(sf_dir)
+    prev = _PARITY_SCRATCH.pop(key, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
     work = scratch_dir("tfrecord_parity_")
     shards = os.path.join(work, "bidlogs")
     try:
@@ -413,12 +434,8 @@ def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchange cardinality GROWS with the corpus (660 k rows and
         # 10-24 s at sf1; the sf1 8c/32c ratio read 1.03 because the
         # driver leg serialized everything). The scratch shards instead
-        # live until interpreter exit (the _replay._lazy_result
-        # discipline); production writes durable TFRecords and never
-        # hits the scratch lifecycle.
-        import atexit
-
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
+        # live until the next call for this sf_dir replaces them.
+        _PARITY_SCRATCH[key] = work
         return flatten_device_profiles(device_profiles(valid_bid_logs(decoded)))
     except BaseException:
         shutil.rmtree(work, ignore_errors=True)

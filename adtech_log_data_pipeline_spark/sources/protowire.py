@@ -10,16 +10,11 @@ written by the reference's Java pipeline is readable by this engine and
 vice versa — without requiring protoc, the google.protobuf package, or the
 spark-protobuf jar, none of which this environment provides.
 
-Two paths, same semantics:
-
-  * preferred (when the optional spark-protobuf jar + a compiled descriptor
-    set ARE available): `pyspark.sql.protobuf.functions.from_protobuf` /
-    `to_protobuf` — JVM-side, vectorized; see `have_spark_protobuf()` and
-    `read_b64_proto_jvm()`.
-  * fallback (always works): a pure-Python wire codec run through
-    Arrow-batched `mapInPandas`. This is a sanctioned boundary codec —
-    the blobs enter/leave the engine exactly once, the hot path stays
-    columnar Parquet — not a per-row UDF in an analytic plan.
+One path: a pure-Python wire codec run through Arrow-batched
+`mapInPandas` (the bid-log shape takes the vectorized lockstep codec in
+`_wirevec.py`: encode here, decode in `tfrecord.py`). This is a sanctioned
+boundary codec — the blobs enter/leave the engine exactly once, the hot
+path stays columnar Parquet — not a per-row UDF in an analytic plan.
 
 Message schemas (field numbers from the reference protos):
 
@@ -50,7 +45,7 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 _WIRE_VARINT, _WIRE_I64, _WIRE_LEN, _WIRE_I32 = 0, 1, 2, 5
 
@@ -550,20 +545,6 @@ def row_to_bidlog(row: dict[str, Any]) -> dict[str, Any]:
 # Spark integration (Arrow-batched boundary codec)
 
 
-def read_b64_proto(
-    spark: SparkSession,
-    path: str,
-    spec: Spec,
-    out_schema: str,
-    to_row: Callable[[dict[str, Any]], dict[str, Any]],
-    drop_default_instance: bool = True,
-) -> DataFrame:
-    """Text source of Base64(proto-wire) lines -> typed DataFrame, dropping
-    malformed rows (S2+S3 with real proto payloads)."""
-    raw = spark.read.text(path)
-    return decode_b64_proto(raw, spec, out_schema, to_row, drop_default_instance)
-
-
 def decode_b64_proto(
     df: DataFrame,
     spec: Spec,
@@ -654,79 +635,3 @@ def encode_wire_proto(
             yield pd.DataFrame({"payload": vals})
 
     return df.mapInPandas(batches, schema="payload binary")
-
-
-def write_b64_proto(
-    df: DataFrame,
-    path: str,
-    spec: Spec,
-    from_row: Callable[[dict[str, Any]], dict[str, Any]],
-    single_file: bool = False,
-) -> None:
-    """Base64 proto text sink (S4). `single_file` mirrors withNumShards(1)
-    locally; never at scale."""
-    out = encode_b64_proto(df, spec, from_row)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
-
-
-# ---------------------------------------------------------------------------
-# optional JVM path (spark-protobuf)
-
-
-def have_spark_protobuf(spark: SparkSession) -> bool:
-    """True when the optional spark-protobuf jar is on the classpath (it is
-    a separate artifact, not bundled with pyspark)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def decode_b64_proto_jvm(
-    df: DataFrame, message_name: str, desc_file: str
-) -> DataFrame:
-    """JVM-side decode via pyspark.sql.protobuf for deployments that ship
-    the spark-protobuf jar and a `protoc --descriptor_set_out` file; the
-    plan shape matches decode_b64_proto (unbase64 -> parse -> drop
-    malformed) with mode=PERMISSIVE yielding null structs for bad rows."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    parsed = df.select(
-        from_protobuf(
-            F.expr("try_to_binary(value, 'base64')"),
-            message_name,
-            descFilePath=desc_file,
-            options={"mode": "PERMISSIVE"},
-        ).alias("r")
-    )
-    return parsed.filter(F.col("r").isNotNull()).select("r.*")
-
-
-def decode_b64_proto_auto(
-    df: DataFrame,
-    spec: Spec,
-    out_schema: str,
-    to_row: Callable[[dict[str, Any]], dict[str, Any]],
-    message_name: str | None = None,
-    desc_file: str | None = None,
-    drop_default_instance: bool = True,
-) -> DataFrame:
-    """Capability-routed proto decode (reference: ProtoUtils.java:22-42):
-    when the spark-protobuf jar is on the classpath AND the caller supplies
-    a compiled descriptor set (``protoc --descriptor_set_out``), decode
-    JVM-side with ``from_protobuf`` — codegen'd, no Python in the hot
-    path; otherwise fall back to the Arrow-batched wire-format decoder,
-    which needs no jar and no compiled protos. Both paths drop malformed
-    records rather than failing the job."""
-    spark = df.sparkSession
-    if message_name and desc_file and have_spark_protobuf(spark):
-        return decode_b64_proto_jvm(df, message_name, desc_file)
-    return decode_b64_proto(
-        df, spec, out_schema, to_row, drop_default_instance=drop_default_instance
-    )

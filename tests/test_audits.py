@@ -170,3 +170,19 @@ def test_schema_drift_audit_nulls_only_on_the_added_column(spark):
     assert out["o_orderpriority"]["n_nulls"] == n_even
     assert out["o_orderpriority"]["n_present"] == n - n_even
     assert out["o_orderkey"]["n_present"] == n
+
+
+def test_tfrecord_parity_check_keeps_one_scratch_copy(spark, tmp_path, monkeypatch):
+    """Each call writes a TFRecord copy of the whole corpus to scratch;
+    a second call for the same input replaces the first call's copy
+    instead of keeping both until interpreter exit. Each returned frame
+    stays readable until the next call."""
+    from adtech_log_data_pipeline_spark.plans.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    q = QUERIES["tfrecord_parity_check"]
+    n_a = q(spark, SF).count()
+    n_b = q(spark, SF).count()
+    assert n_a == n_b > 0
+    left = [p.name for p in tmp_path.iterdir() if p.name.startswith("tfrecord_parity_")]
+    assert len(left) == 1, left

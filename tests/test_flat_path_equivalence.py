@@ -7,7 +7,6 @@ from adtech_log_data_pipeline_spark.operators import (
     app_profiles,
     device_profiles,
     feature_inputs,
-    feature_inputs_from_valid,
     flatten_app_profiles,
     suspicious_ids,
     suspicious_ids_from_valid,
@@ -38,23 +37,14 @@ def test_suspicious_paths_equal(spark):
     assert rows(nested) == rows(flat)
 
 
-def test_feature_paths_equal(spark):
-    v = valid_bid_logs(load_bid_logs(spark, SF))
-    p = device_profiles(v)
-    iapp = load_iapp(spark, SF)
-    susp = suspicious_ids(p, app_profiles(p), T)
-    nested = feature_inputs(p, susp, iapp)
-    flat = feature_inputs_from_valid(v, suspicious_ids_from_valid(v, T), iapp)
-    assert rows(nested) == rows(flat)
-
-
 def test_fused_pipeline_equals_composed(spark):
     from adtech_log_data_pipeline_spark.operators.features import (
         feature_pipeline_from_valid,
     )
 
     v = valid_bid_logs(load_bid_logs(spark, SF))
+    p = device_profiles(v)
     iapp = load_iapp(spark, SF)
-    composed = feature_inputs_from_valid(v, suspicious_ids_from_valid(v, T), iapp)
+    nested = feature_inputs(p, suspicious_ids(p, app_profiles(p), T), iapp)
     fused = feature_pipeline_from_valid(v, iapp, T)
-    assert rows(composed) == rows(fused)
+    assert rows(nested) == rows(fused)

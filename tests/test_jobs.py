@@ -59,9 +59,9 @@ def test_prediction_job_end_to_end(spark, logs, tmp_path):
 
 def test_bidlog_job_reruns_on_unchanged_file_backed_input(spark, logs, tmp_path):
     """Two BidLogJob runs over the same TFRecord shards in one session:
-    the second run's skew-router probe hits the exact-tier memo, and must
-    hold its own plan rather than the first run's key frame, whose plan
-    carries the first run's Observation (DUPLICATED_METRICS_NAME)."""
+    the second run's skew-router probe must hold its own plan, never a
+    frame whose plan carries the first run's Observation
+    (DUPLICATED_METRICS_NAME)."""
     from adtech_log_data_pipeline_spark.sources.protowire import (
         BID_LOG,
         BID_LOG_SQL_SCHEMA,
@@ -109,6 +109,44 @@ def test_jobs_release_their_cached_frames(spark, logs, tmp_path):
     assert footprint() == before
     assert res.device_profiles.count() == 4 and res.suspicious.count() == 1
     assert preds.count() == 3
+
+
+def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
+    """BidLogJob + PredictionJob three times over the CLI input path in
+    one session: no module-level container of the skew router grows, the
+    cache registry ends where it started, and no persistent RDD the jobs
+    made survives them. RDD ids, not the count: RDDs that earlier tests
+    leaked may be cleaned up by the JVM while this test runs."""
+    from adtech_log_data_pipeline_spark.functions import _cache
+    from adtech_log_data_pipeline_spark.operators import skew
+    from adtech_log_data_pipeline_spark.sources.bidlogs import load_bid_logs, load_iapp
+
+    sf = "/root/testdata/sf0.001"
+
+    def footprint():
+        containers = {
+            name: len(v)
+            for name, v in vars(skew).items()
+            if not name.startswith("__") and isinstance(v, (dict, list, set))
+        }
+        return containers, len(_cache._HELD)
+
+    def rdd_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before, before_rdds = footprint(), rdd_ids()
+    for run in range(3):
+        bid, pred = str(tmp_path / f"b{run}"), str(tmp_path / f"p{run}")
+        run_bidlog_job(spark, load_bid_logs(spark, sf), output_dir=bid)
+        run_prediction_job(
+            spark,
+            spark.read.parquet(f"{bid}/device_profiles"),
+            spark.read.parquet(f"{bid}/suspicious"),
+            load_iapp(spark, sf),
+            output_dir=pred,
+        )
+        assert footprint() == before, run
+        assert rdd_ids() <= before_rdds, run
 
 
 def test_b64_codec_roundtrip_drops_malformed(spark, tmp_path):

@@ -173,31 +173,6 @@ def test_device_profile_row_mapping_is_inverse():
     assert row_to_device_profile(row) == small_profile()
 
 
-def test_auto_decode_routes_by_capability(spark):
-    """decode_b64_proto_auto must decode correctly on WHICHEVER path this
-    environment supports: the from_protobuf JVM path when the
-    spark-protobuf jar + descriptor are present, else the wire-format
-    fallback. Both paths share the malformed-drop contract, so the
-    assertion is identical either way."""
-    from adtech_log_data_pipeline_spark.sources.protowire import (
-        decode_b64_proto_auto,
-        have_spark_protobuf,
-    )
-
-    line = base64.b64encode(encode_message(small_profile(), DEVICE_PROFILE))
-    df = spark.createDataFrame(
-        [(line.decode(),), ("!!!not-base64!!!",)], "value string"
-    )
-    # no descriptor file is shipped in this container, so pass none: the
-    # router must take the wire path even if the jar were present
-    out = decode_b64_proto_auto(
-        df, DEVICE_PROFILE, DEVICE_PROFILE_SQL_SCHEMA, device_profile_to_row
-    ).collect()
-    assert len(out) == 1 and out[0]["uuid"] == "A"
-    # capability probe itself must be callable either way (no raise)
-    assert have_spark_protobuf(spark) in (True, False)
-
-
 from hypothesis import given, settings
 import hypothesis.strategies as st
 

@@ -433,62 +433,18 @@ def test_routed_anti_join_semi_and_composite_key(spark):
         routed_anti_join(facts, dim, ["os", "uuid"], how="inner")
 
 
-def test_routed_anti_join_probe_memo(spark):
-    """Within a session the key-count probe runs once per distinct lookup
-    plan: the second routed_anti_join over a semantically identical dim
-    reports probe == "memo" and returns identical rows; a different dim
-    plan re-probes fresh."""
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        probe_memo_clear,
-        routed_anti_join,
-    )
-
-    probe_memo_clear()
-    facts = spark.createDataFrame(
-        [(f"k{i % 20}", i) for i in range(100)], "k string, v int"
-    )
-    dim = spark.createDataFrame([(f"k{i}",) for i in range(0, 20, 3)], "k string")
-    want = facts.join(dim, "k", "left_anti")
-
-    rep1, rep2, rep3 = {}, {}, {}
-    a = routed_anti_join(facts, dim, "k", report=rep1)
-    b = routed_anti_join(facts, dim, "k", report=rep2)
-    assert rep1["probe"] == "fresh" and rep2["probe"] == "memo"
-    assert rep1["n_keys"] == rep2["n_keys"]
-    for got in (a, b):
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-    other = spark.createDataFrame([("k1",), ("k2",)], "k string")
-    routed_anti_join(facts, other, "k", report=rep3)
-    assert rep3["probe"] == "fresh" and rep3["n_keys"] == 2
-
-    # memo survives the inter-query cache release (frame unpersisted but
-    # the count is still valid for the immutable fixture)
-    from adtech_log_data_pipeline_spark.functions._cache import release_cached
-
-    release_cached()
-    rep4 = {}
-    c = routed_anti_join(facts, dim, "k", report=rep4)
-    assert rep4["probe"] == "memo"
-    assert c.exceptAll(want).count() == 0 and want.exceptAll(c).count() == 0
-    probe_memo_clear()
-
-
 def test_helper_columns_never_clobber_user_columns(spark):
     """Facts that already carry _hit/_salt columns pass through every
     rung and every salted operator unscathed (the helper names are
     generated collision-free)."""
     from adtech_log_data_pipeline_spark.operators.skew import (
         AntiJoinRouting,
-        probe_memo_clear,
         routed_anti_join,
         salted_anti_join,
         salted_count_distinct,
         salted_join,
     )
 
-    probe_memo_clear()
     facts = spark.createDataFrame(
         [(f"k{i % 10}", i, 7, 9) for i in range(80)],
         "k string, v int, _hit int, _salt int",
@@ -518,23 +474,16 @@ def test_helper_columns_never_clobber_user_columns(spark):
     cwant = facts.groupBy("k").agg(F.countDistinct("_salt", "v").alias("n"))
     cgot = salted_count_distinct(facts, ["k"], ["_salt", "v"], alias="n")
     assert cgot.exceptAll(cwant).count() == 0 and cwant.exceptAll(cgot).count() == 0
-    probe_memo_clear()
 
 
-def test_probe_memo_invalidates_on_source_rewrite(spark, tmp_path):
-    """An in-place rewrite of the lookup's source files must invalidate
-    BOTH memo tiers (the size/mtime fingerprint folded into the keys —
-    round-11 ADVICE): the re-probe is fresh, reports the NEW key count,
+def test_routed_anti_join_sees_rewritten_lookup(spark, tmp_path):
+    """An in-place rewrite of the lookup's source files within a session
+    is seen by the next routed join: the probe reports the NEW key count
     and the join reflects the rewritten key set."""
-    import os
     import time
 
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        probe_memo_clear,
-        routed_anti_join,
-    )
+    from adtech_log_data_pipeline_spark.operators.skew import routed_anti_join
 
-    probe_memo_clear()
     facts = spark.createDataFrame(
         [(f"k{i % 20}", i) for i in range(100)], "k string, v int"
     )
@@ -543,12 +492,10 @@ def test_probe_memo_invalidates_on_source_rewrite(spark, tmp_path):
         [(f"k{i}",) for i in range(4)], "k string"
     ).coalesce(1).write.mode("overwrite").parquet(d)
 
-    rep1, rep2, rep3 = {}, {}, {}
+    rep1, rep2 = {}, {}
     a = routed_anti_join(facts, spark.read.parquet(d), "k", report=rep1)
     n_a = a.count()
-    routed_anti_join(facts, spark.read.parquet(d), "k", report=rep2)
-    assert rep1["probe"] == "fresh" and rep1["n_keys"] == 4
-    assert rep2["probe"] == "memo"
+    assert rep1["n_keys"] == 4
 
     time.sleep(0.05)  # ensure a distinct mtime_ns on coarse filesystems
     spark.createDataFrame(
@@ -557,11 +504,9 @@ def test_probe_memo_invalidates_on_source_rewrite(spark, tmp_path):
     # drop Spark's own file-listing cache so the new files are visible
     spark.catalog.refreshByPath(d)
 
-    b = routed_anti_join(facts, spark.read.parquet(d), "k", report=rep3)
-    assert rep3["probe"] == "fresh", rep3
-    assert rep3["n_keys"] == 9
+    b = routed_anti_join(facts, spark.read.parquet(d), "k", report=rep2)
+    assert rep2["n_keys"] == 9
     assert b.count() < n_a  # more keys removed more facts
-    probe_memo_clear()
 
 
 def test_hygienic_drops_stale_stream_tables(spark):
@@ -580,63 +525,6 @@ def test_hygienic_drops_stale_stream_tables(spark):
     QUERIES["pricing_summary"](spark, "/root/testdata/sf0.001").count()
     names = [t.name for t in spark.catalog.listTables() if t.isTemporary]
     assert "lineitem" in names  # fixture views untouched
-
-
-def test_plan_fingerprint_stable_across_lambda_constructions(spark, tmp_path):
-    """Two separately-constructed but identical lookup plans containing
-    higher-order functions (Python lambdas — pyspark binder names carry
-    a session-global counter: x_1 vs x_2) must fingerprint-equal, and a
-    literal change must still change the fingerprint (round-12 ADVICE:
-    the ExprId-only normalizer silently disabled the memo tier for
-    every transform()/filter()-bearing dim plan)."""
-    from pyspark.sql import functions as F
-
-    from adtech_log_data_pipeline_spark.operators.skew import _plan_fingerprint
-
-    d = str(tmp_path / "dim.parquet")
-    spark.createDataFrame(
-        [(i, [i, i + 1]) for i in range(4)], "k long, xs array<long>"
-    ).write.mode("overwrite").parquet(d)
-
-    def build(thresh):
-        return (
-            spark.read.parquet(d)
-            .select("k", F.transform("xs", lambda x: x + 1).alias("ys"))
-            .filter(F.size(F.filter("ys", lambda y: y > F.lit(thresh))) > 0)
-        )
-
-    f1, f2 = _plan_fingerprint(build(0)), _plan_fingerprint(build(0))
-    assert f1 and f1 == f2
-    assert _plan_fingerprint(build(5)) != f1
-
-
-def test_probe_memo_evicts_stale_source_entries(spark, tmp_path):
-    """A fresh probe after a fixture rewrite must EVICT the old-source
-    entries from both memo tiers, not leave them retaining a dead
-    DataFrame handle + stale count forever (round-12 ADVICE)."""
-    import time
-
-    from adtech_log_data_pipeline_spark.operators import skew
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        probe_memo_clear,
-        routed_anti_join,
-    )
-
-    probe_memo_clear()
-    facts = spark.createDataFrame(
-        [(f"k{i % 20}", i) for i in range(60)], "k string, v int"
-    )
-    d = str(tmp_path / "dim.parquet")
-    for n in (4, 9):
-        spark.createDataFrame(
-            [(f"k{i}",) for i in range(n)], "k string"
-        ).coalesce(1).write.mode("overwrite").parquet(d)
-        spark.catalog.refreshByPath(d)
-        routed_anti_join(facts, spark.read.parquet(d), "k", report={})
-        assert len(skew._PROBE_MEMO) == 1, skew._PROBE_MEMO.keys()
-        assert len(skew._PROBE_FP_MEMO) <= 1
-        time.sleep(0.05)  # distinct mtime_ns for the rewrite
-    probe_memo_clear()
 
 
 def test_interleaved_streaming_queries_keep_results(spark):
