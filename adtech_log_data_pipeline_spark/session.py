@@ -7,6 +7,22 @@ the pandas-UDF path, UTC so timestamps hash identically against the
 DuckDB oracle, and shuffle partitions sized to cores locally (the 200
 default over-parallelizes small data and under-parallelizes 100 TB —
 at cluster scale AQE coalescing makes the initial number less critical).
+
+The whole-stage-codegen class cache is sized to the engine's working set.
+Spark compiles each generated Java source with Janino and keeps the
+classes in an LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries
+(default 100). One BidLogJob + PredictionJob run uses ~130 distinct
+classes and one pass of the perfbench ``query_mix`` ~150-180, so at the
+default every warm pass evicted the classes the next one needed and
+recompiled them all (~130 compiles, 1.0-1.4 s of a ~7 s perfbench
+``bidlog_pipeline`` op on 4 cores). 1000 entries leave headroom over
+both. Class names carry no ``codegenStageId``
+(``useIdInClassName=false``): AQE numbers stages differently from one
+run to the next, so with ids in the names the same plan yields a new
+source text and misses the cache. With both settings a warm op of
+either workload compiles nothing. What the cache retains (classes and
+their Metaspace) stays bounded by ``maxEntries``; ``extra_conf`` can
+override either setting.
 """
 
 from __future__ import annotations
@@ -47,6 +63,8 @@ def get_spark(
         # into GC thrash; override with SPARK_DRIVER_MEM
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

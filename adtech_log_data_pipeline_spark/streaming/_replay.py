@@ -18,6 +18,7 @@ module so a protocol fix lands in one place.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 
 def scratch_dir(prefix: str) -> str:
     """Scratch root for bounded-replay state/checkpoint/sink files —
-    all deleted when the replay returns, so DURABILITY IS NOT REQUIRED
+    all harness-owned temporaries, so DURABILITY IS NOT REQUIRED
     and a RAM filesystem is the right medium: the two-phase protocol's
     cost is dominated by many small fsync-heavy state-store and
     checkpoint files. Prefers /dev/shm when present (override with
@@ -42,9 +43,30 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-def make_replay_dirs(prefix: str) -> tuple[str, str, str, str]:
-    """(work, sentinel_dir, out_dir, ckpt_dir) under one temp root."""
+# (prefix, input key) -> the work dir behind the last lazy replay result
+# made for it; the next replay with the same pair deletes it first
+_REPLAY_SCRATCH: dict[tuple[str, str], str] = {}
+
+
+@atexit.register
+def _drop_replay_scratch() -> None:
+    for work in _REPLAY_SCRATCH.values():
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def make_replay_dirs(prefix: str, input_key: str) -> tuple[str, str, str, str]:
+    """(work, sentinel_dir, out_dir, ckpt_dir) under one temp root.
+
+    The root backs the replay's lazy result until the next replay with
+    the same ``prefix`` and ``input_key`` (the replayed input) deletes it,
+    so a long-lived session keeps at most one work dir per replay kind
+    and input; whatever is left goes at interpreter exit."""
+    slot = (prefix, input_key)
+    prev = _REPLAY_SCRATCH.pop(slot, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
     work = scratch_dir(prefix)
+    _REPLAY_SCRATCH[slot] = work
     sentinel_dir = os.path.join(work, "sentinel")
     out_dir = os.path.join(work, "out")
     ckpt_dir = os.path.join(work, "ckpt")
@@ -73,24 +95,20 @@ def _run_phase(
 def _lazy_result(
     spark: SparkSession,
     output_schema: str,
-    work: str,
     out_dir: str,
     result_filter: F.Column | None,
 ) -> DataFrame:
-    """Return the finished replay's sink as a LAZY parquet-backed frame and
-    defer the scratch cleanup to interpreter exit. Skipping the old
-    collect()+createDataFrame materialization saves ~1s per replay on a
-    100k-row result, and a parquet read preserves NULL longs exactly on
-    any session (the round-4 NaN hazard only existed on the pandas
-    round-trip — reading the files back involves no pandas). The leaked
-    scratch is the result parquet itself (small); production points the
-    sink at durable storage and never hits this path."""
-    import atexit
-
+    """Return the finished replay's sink as a LAZY parquet-backed frame;
+    its scratch lives until the next replay of the same kind and input
+    (see make_replay_dirs). Skipping the old collect()+createDataFrame
+    materialization saves ~1s per replay on a 100k-row result, and a
+    parquet read preserves NULL longs exactly on any session (the round-4
+    NaN hazard only existed on the pandas round-trip — reading the files
+    back involves no pandas). Production points the sink at durable
+    storage and never hits this path."""
     result = spark.read.schema(output_schema).parquet(out_dir)
     if result_filter is not None:
         result = result.filter(result_filter)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
     return result
 
 
@@ -107,10 +125,11 @@ def run_two_phase(
     """Execute ``stream`` (already union'd with the caller's empty
     sentinel source and watermarked) to completion via the two-phase
     protocol, then return the sink as a lazy parquet-backed frame
-    (scratch removed at interpreter exit — see _lazy_result). The parquet
-    sink is checkpointed (exactly-once; a memory sink cannot recover
-    across the phase-2 restart); production points the sink at durable
-    storage and skips the scratch lifecycle entirely.
+    (scratch kept until the next replay of this kind and input — see
+    make_replay_dirs). The parquet sink is checkpointed (exactly-once; a
+    memory sink cannot recover across the phase-2 restart); production
+    points the sink at durable storage and skips the scratch lifecycle
+    entirely.
 
     This is the RESTART-PROVING variant (state and file offsets recover
     across a stop/start between the phases); the hot path for the
@@ -121,7 +140,7 @@ def run_two_phase(
         _run_phase(spark, stream, out_dir, ckpt_dir)
         write_sentinel()
         _run_phase(spark, stream, out_dir, ckpt_dir)
-        return _lazy_result(spark, output_schema, work, out_dir, result_filter)
+        return _lazy_result(spark, output_schema, out_dir, result_filter)
     except BaseException:
         shutil.rmtree(work, ignore_errors=True)
         raise
@@ -155,7 +174,7 @@ def run_sealed(
     try:
         write_sentinel()
         _run_phase(spark, stream, out_dir, ckpt_dir)
-        return _lazy_result(spark, output_schema, work, out_dir, result_filter)
+        return _lazy_result(spark, output_schema, out_dir, result_filter)
     except BaseException:
         shutil.rmtree(work, ignore_errors=True)
         raise

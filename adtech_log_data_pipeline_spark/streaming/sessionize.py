@@ -150,6 +150,7 @@ def sessionize_bounded(
     max_ts_ms: int,
     delay_ms: int = 60_000,
     sealed: bool = False,
+    input_key: str = "",
 ) -> DataFrame:
     """Sessionize a bounded replay stream ``ev`` (columns user_id, ts —
     ANY micro-batch slicing) to completion; the result equals batch
@@ -164,11 +165,17 @@ def sessionize_bounded(
     query (_replay.run_sealed — half the fixed cost); only valid when
     ``ev`` has no per-trigger limits (the whole replay must land in the
     first micro-batch; a maxFilesPerTrigger stream would late-drop every
-    file after the first). The multi-batch law tests keep sealed=False."""
+    file after the first). The multi-batch law tests keep sealed=False.
+
+    ``input_key`` names the replayed input: the lazy result reads scratch
+    files that the next call with the same key deletes (calls that pass
+    none share one key)."""
     from ._replay import make_replay_dirs, run_sealed, run_two_phase
 
     sentinel_ms = max_ts_ms + SESSION_GAP_MS + delay_ms + 3_600_000
-    work, sentinel_dir, out_dir, ckpt_dir = make_replay_dirs("sessionize_run_")
+    work, sentinel_dir, out_dir, ckpt_dir = make_replay_dirs(
+        "sessionize_run_", input_key
+    )
     sent = (
         spark.readStream.schema("user_id long, ts timestamp_ntz")
         .parquet(sentinel_dir)
@@ -214,4 +221,5 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_stream(spark, sf_dir),
         table_ts_max_ms(sf_dir, "events"),
         sealed=True,
+        input_key=os.path.abspath(sf_dir),
     )

@@ -226,16 +226,19 @@ def spend_sessions_bounded(
     max_ts_ms: int,
     delay_ms: int = 60_000,
     sealed: bool = False,
+    input_key: str = "",
 ) -> DataFrame:
     """Run the spend sessionizer over a bounded purchase replay to
     completion (result equals the batch sessionization the oracle states),
     via the shared sentinel protocol in streaming/_replay.py
     (``sealed=True`` = pre-seeded sentinel, one availableNow query — only
-    for limit-free streams; see sessionize_bounded)."""
+    for limit-free streams; ``input_key`` as in sessionize_bounded)."""
     from ._replay import make_replay_dirs, run_sealed, run_two_phase
 
     sentinel_ms = max_ts_ms + SESSION_GAP_MS + delay_ms + 3_600_000
-    work, sentinel_dir, out_dir, ckpt_dir = make_replay_dirs("spend_run_")
+    work, sentinel_dir, out_dir, ckpt_dir = make_replay_dirs(
+        "spend_run_", input_key
+    )
     sent = (
         spark.readStream.schema("user_id long, ts timestamp_ntz, value double")
         .parquet(sentinel_dir)
@@ -281,5 +284,9 @@ def streaming_spend_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sealed: single-file limit-free stream built right here
     return spend_sessions_bounded(
-        spark, purchases, table_ts_max_ms(sf_dir, "events"), sealed=True
+        spark,
+        purchases,
+        table_ts_max_ms(sf_dir, "events"),
+        sealed=True,
+        input_key=os.path.abspath(sf_dir),
     )

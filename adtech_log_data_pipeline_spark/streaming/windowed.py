@@ -437,7 +437,10 @@ def stream_attribution_outer(
     sentinel_ms = (
         max_ts_ms + ATTRIBUTION_WINDOW_MIN * 60_000 + delay_s * 1000 + 3_600_000
     )
-    work, sentinel_dir, out_dir, ckpt_dir = make_replay_dirs("attr_outer_")
+    # one scratch slot per join type and input: the result reads it lazily
+    work, sentinel_dir, out_dir, ckpt_dir = make_replay_dirs(
+        f"attr_{join_type.lower()}_", _os.path.abspath(sf_dir)
+    )
 
     def write_sentinel() -> None:
         import pyarrow as pa

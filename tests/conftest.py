@@ -5,6 +5,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from adtech_log_data_pipeline_spark.functions._cache import (
+    registry_mark,
+    release_cached_from,
+)
 from adtech_log_data_pipeline_spark.session import get_spark
 
 
@@ -12,6 +16,17 @@ from adtech_log_data_pipeline_spark.session import get_spark
 def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_held_frames():
+    """Unpersist the frames a test held (``functions/_cache.hold``) when it
+    ends, so the suite's one long-lived session carries no cached data
+    from one test into the next. Frames held by wider-scoped fixtures are
+    registered before the mark and stay cached for their scope."""
+    mark = registry_mark()
+    yield
+    release_cached_from(mark)
 
 
 VALID_LOG = {

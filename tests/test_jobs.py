@@ -116,11 +116,21 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
     one session: no module-level container of the skew router grows, the
     cache registry ends where it started, and no persistent RDD the jobs
     made survives them. RDD ids, not the count: RDDs that earlier tests
-    leaked may be cleaned up by the JVM while this test runs."""
+    leaked may be cleaned up by the JVM while this test runs.
+
+    After the first run Janino compiles no whole-stage-codegen class:
+    the session's class cache holds the jobs' ~130 classes and their
+    names carry no stage id. At Spark's default 100 entries each run
+    evicted what the next one needed and recompiled ~125."""
     from adtech_log_data_pipeline_spark.functions import _cache
     from adtech_log_data_pipeline_spark.operators import skew
     from adtech_log_data_pipeline_spark.sources.bidlogs import load_bid_logs, load_iapp
 
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
     sf = "/root/testdata/sf0.001"
 
     def footprint():
@@ -136,6 +146,7 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
 
     before, before_rdds = footprint(), rdd_ids()
     for run in range(3):
+        compiled = compiles.getCount()
         bid, pred = str(tmp_path / f"b{run}"), str(tmp_path / f"p{run}")
         run_bidlog_job(spark, load_bid_logs(spark, sf), output_dir=bid)
         run_prediction_job(
@@ -147,6 +158,8 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
         )
         assert footprint() == before, run
         assert rdd_ids() <= before_rdds, run
+        if run > 0:
+            assert compiles.getCount() == compiled, run
 
 
 def test_b64_codec_roundtrip_drops_malformed(spark, tmp_path):

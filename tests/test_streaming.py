@@ -289,6 +289,27 @@ def test_scratch_dir_env_override(tmp_path, monkeypatch):
     os.rmdir(d)
 
 
+def test_repeated_replays_keep_one_scratch_dir_per_key(spark, tmp_path, monkeypatch):
+    """Each bounded replay's lazy result reads its scratch dir, so the dir
+    outlives the call; the next replay of the same kind over the same
+    input deletes it. Two calls each of three replay queries leave one
+    dir per query, and the latest results stay readable."""
+    import os
+
+    from adtech_log_data_pipeline_spark.streaming import (
+        stream_attribution_outer,
+        streaming_sessionize,
+        streaming_spend_sessions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    replays = (streaming_sessionize, streaming_spend_sessions, stream_attribution_outer)
+    first = [fn(spark, SF).count() for fn in replays]
+    latest = [fn(spark, SF) for fn in replays]
+    assert [out.count() for out in latest] == first
+    assert len(os.listdir(tmp_path)) == len(replays)
+
+
 def test_sealed_replay_equals_two_phase(spark):
     """The single-query sealed protocol (sentinel pre-seeded, one
     availableNow run) must produce exactly the two-phase protocol's

@@ -2,16 +2,20 @@
 
 For each named query: capture .explain("formatted") to a file, then time
 N noop-sink executions (cache cleared between runs, same methodology as
-bench.py::run_chunk) and report per-run seconds plus the Spark job count
+bench.py::run_chunk) and report per-run seconds, the Spark job count
 the execution spawned (scheduler-side cost signal local mode hides in
-wall time). Jobs are labeled via setJobDescription.
+wall time), and per run the whole-stage-codegen classes Janino compiled
+and the time that took (the codegen layer: a warm run that hits Spark's
+class cache compiles 0). Jobs are labeled via setJobDescription.
 
 Usage:
     python tools/profile_query.py [--plans-dir plans/r13] [--suffix before]
         [--runs 2] [--no-time] [--sf-dir DIR] query [query ...]
 
 Prints one JSON line per query:
-    {"query": name, "runs": [sec, ...], "n_jobs": J, "plan_file": path}
+    {"query": name, "runs": [sec, ...], "best": sec, "n_jobs_last_run": J,
+     "codegen_compiles": [n, ...], "codegen_compile_ms": [ms, ...],
+     "plan_file": path}
 """
 
 from __future__ import annotations
@@ -64,6 +68,14 @@ def main() -> None:
         except Exception:
             return -1
 
+    # JVM-wide codegen counters, read as deltas around each timed run:
+    # classes compiled (CodegenMetrics) and total compile nanoseconds
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def _codegen() -> tuple[int, int]:
+        return compiled.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime()
+
     for name in args.queries:
         if name not in QUERIES:
             print(json.dumps({"query": name, "error": "unknown"}))
@@ -85,16 +97,20 @@ def main() -> None:
             release_cached()
             spark.catalog.clearCache()
         if not args.no_time:
-            runs = []
+            runs, compiles, compile_ms = [], [], []
             jobs0 = jobs1 = 0
             for i in range(args.runs):
                 sc.setJobDescription(f"profile:{name}:run{i}")
                 jobs0 = _n_jobs()
+                n0, ns0 = _codegen()
                 t0 = time.time()
                 QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 runs.append(round(time.time() - t0, 3))
+                n1, ns1 = _codegen()
+                compiles.append(n1 - n0)
+                compile_ms.append(round((ns1 - ns0) / 1e6, 1))
                 jobs1 = _n_jobs()
                 release_cached()
                 spark.catalog.clearCache()
@@ -102,6 +118,8 @@ def main() -> None:
             out["runs"] = runs
             out["best"] = min(runs)
             out["n_jobs_last_run"] = jobs1 - jobs0
+            out["codegen_compiles"] = compiles
+            out["codegen_compile_ms"] = compile_ms
         print(json.dumps(out), flush=True)
 
 
