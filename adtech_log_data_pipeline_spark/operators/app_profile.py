@@ -6,9 +6,11 @@ plus one `(bundle, exchange)` token per exchange PRESENT in the app's
 count_per_exchange map (presence, not weighted by count — EmitData at
 AppProfiles.java:117-133), then counts tokens. Since device ids are unique
 after the duplicate tripwire, token counts == distinct-user counts. The
-Spark-native statement of that semantic truth is countDistinct over the
-exploded device-app(-exchange) rows — one shuffle per agg level, partial
-aggregation included, no sentinel tokens needed.
+Spark-native statement of that semantic truth is a count over the
+distinct device-app(-exchange) rows — one shuffle per agg level, partial
+aggregation included, no sentinel tokens needed. _slot_counts is that
+count; app_profiles feeds it from nested DeviceProfiles and
+app_profile_slots_from_valid from flat validated rows.
 """
 
 from __future__ import annotations
@@ -43,48 +45,61 @@ def assert_unique_device_ids(profiles: DataFrame) -> None:
         )
 
 
+def _slot_counts(device_app_exchanges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The counting core both entry points share, over distinct (os, uuid,
+    bundle, exchange) rows. Returns the user leg (bundle, user_count) and
+    the exchange leg (bundle, exchange, cnt). Rows are distinct, so every
+    count is a plain count(*)."""
+    users = (
+        device_app_exchanges.select("os", "uuid", "bundle")
+        .distinct()
+        .groupBy("bundle")
+        .agg(F.count(F.lit(1)).cast("int").alias("user_count"))
+    )
+    per_exchange = device_app_exchanges.groupBy("bundle", "exchange").agg(
+        F.count(F.lit(1)).cast("int").alias("cnt")
+    )
+    return users, per_exchange
+
+
 def app_profiles(profiles: DataFrame) -> DataFrame:
     """AppProfile per bundle: user_count (distinct devices with the app) and
     user_count_per_exchange (distinct devices whose app activity includes
     the exchange). Output schema (FIXTURES.md / profile.proto:130-145):
       bundle string, user_count int,
       user_count_per_exchange map<int,int> (zero entries absent)
+
+    The adapter runs the duplicate tripwire, explodes the profiles into
+    (os, uuid, bundle, exchange) rows (distinct once device ids are
+    unique) for _slot_counts, and re-nests the exchange leg into the map.
     """
     assert_unique_device_ids(profiles)
 
-    device_apps = profiles.select(
+    device_app_exchanges = profiles.select(
         "os", "uuid", F.explode("apps").alias("app")
-    ).select("os", "uuid", F.col("app.bundle").alias("bundle"), "app.count_per_exchange")
-
-    users = device_apps.groupBy("bundle").agg(
-        F.countDistinct("os", "uuid").cast("int").alias("user_count")
+    ).select(
+        "os",
+        "uuid",
+        F.col("app.bundle").alias("bundle"),
+        F.explode(F.map_keys("app.count_per_exchange")).alias("exchange"),
     )
-
-    per_exchange = (
-        device_apps.select(
-            "os", "uuid", "bundle", F.explode(F.map_keys("count_per_exchange")).alias("exchange")
-        )
-        .groupBy("bundle", "exchange")
-        .agg(F.countDistinct("os", "uuid").cast("int").alias("cnt"))
-        .groupBy("bundle")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("exchange", "cnt")))
-            ).alias("user_count_per_exchange")
-        )
+    users, per_exchange = _slot_counts(device_app_exchanges)
+    exchange_maps = per_exchange.groupBy("bundle").agg(
+        F.map_from_entries(
+            F.sort_array(F.collect_list(F.struct("exchange", "cnt")))
+        ).alias("user_count_per_exchange")
     )
-
-    return users.join(per_exchange, "bundle")
+    return users.join(exchange_maps, "bundle")
 
 
 def app_profile_slots_from_valid(valid_logs: DataFrame) -> DataFrame:
-    """Scale-optimized formulation of A3-A5 directly over the flat validated
-    rows — identical output to flatten_app_profiles(app_profiles(...)) (the
-    equivalence is oracle- and test-checked) without materializing nested
-    profiles first: the reference builds AppProfiles FROM DeviceProfiles
-    because Beam has no shared scans; in Spark that detour costs an
-    ObjectHashAggregate collect_list + explode per branch, all outside
-    whole-stage codegen. Here: distinct -> two codegen hash aggs.
+    """flatten_app_profiles(app_profiles(device_profiles(valid_logs))),
+    straight from the flat validated rows: the same _slot_counts core, fed
+    without materializing nested profiles first. The reference builds
+    AppProfiles FROM DeviceProfiles because Beam has no shared scans; in
+    Spark that detour costs an ObjectHashAggregate collect_list + explode
+    per branch, all outside whole-stage codegen. Here: distinct -> two
+    codegen hash aggs.
 
     Devices are distinct by construction (groupBy), so the A2 duplicate
     tripwire is structural rather than a runtime probe on this path.
@@ -92,31 +107,22 @@ def app_profile_slots_from_valid(valid_logs: DataFrame) -> DataFrame:
     The distinct (os, uuid, bundle, exchange) relation is persisted: it is
     the big cardinality reduction (bid-log rows -> device-app-exchange) and
     BOTH legs aggregate from it — without the persist the scan+derive
-    pipeline would execute once per leg. Post-distinct, every count is a
-    plain count(*)."""
+    pipeline would execute once per leg."""
     from ..functions._cache import hold
 
-    device_apps = hold(
-        valid_logs.select(
-            "os", "uuid", F.col("app_bundle").alias("bundle"), "exchange"
-        ).distinct(),
-        # lazy hold (r13): the first consumer's action fills the cache;
-        # concurrent fills are serialized per partition by the block
-        # manager, so an upfront count is pure added latency (see hold())
+    users, per_exchange = _slot_counts(
+        hold(
+            valid_logs.select(
+                "os", "uuid", F.col("app_bundle").alias("bundle"), "exchange"
+            ).distinct(),
+            # lazy hold (r13): the first consumer's action fills the cache;
+            # concurrent fills are serialized per partition by the block
+            # manager, so an upfront count is pure added latency (see hold())
+        )
     )
-    user_leg = (
-        device_apps.select("os", "uuid", "bundle")
-        .distinct()
-        .groupBy("bundle")
-        .agg(F.count(F.lit(1)).cast("int").alias("cnt"))
-        .select("bundle", F.lit(-1).alias("slot"), "cnt")
-    )
-    ex_leg = (
-        device_apps.groupBy("bundle", F.col("exchange").alias("slot"))
-        .agg(F.count(F.lit(1)).cast("int").alias("cnt"))
-        .select("bundle", "slot", "cnt")
-    )
-    return user_leg.unionByName(ex_leg)
+    return users.select(
+        "bundle", F.lit(-1).alias("slot"), F.col("user_count").alias("cnt")
+    ).unionByName(per_exchange.select("bundle", F.col("exchange").alias("slot"), "cnt"))
 
 
 def flatten_app_profiles(aps: DataFrame) -> DataFrame:

@@ -12,22 +12,35 @@ Pipeline: DeviceProfiles
      match through a LEFT join from the sampled side (coalesce 0)
   -> 4 ratio features against the global IAPP scalars (A6)
 
+One implementation, thin adapters: in_sample holds the sample predicate
+and assemble_features the IAPP join, the intersection aggregates, the
+IAPP totals and the ratios. feature_inputs feeds them from nested
+DeviceProfiles, feature_pipeline_from_valid from flat validated rows.
+
 Everything is native DataFrame ops; the only Python is the downstream
 feature-vector/inference UDF (inference.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .suspicious import SuspiciousThresholds, is_suspicious, score_devices
 
-def feature_inputs(
-    profiles: DataFrame,
-    suspicious: DataFrame,
-    iapp: DataFrame,
+
+def in_sample() -> Column:
+    """The deterministic 1/16 sample (F6; Features.java:116): the canonical
+    uuid's character at index 7 is '0'."""
+    return F.substring(F.col("uuid"), 8, 1) == "0"
+
+
+def assemble_features(
+    kept: DataFrame, kept_apps: DataFrame, iapp: DataFrame
 ) -> DataFrame:
-    """Per kept device: intersection aggregates + ratio features.
+    """The assembly core both entry points share. `kept` holds the kept
+    devices (os, uuid, first_at, app_count); `kept_apps` their (os, uuid,
+    bundle) pairs.
 
     Output: os, uuid, first_at, app_count, intersect_app,
     intersect_purchaser, intersect_amount, f486, f586, f686, f777.
@@ -38,19 +51,8 @@ def feature_inputs(
       f586 = intersect_purchaser / (1 + total_purchasers)
       f777 = intersect_amount / (1 + total_amount)
     """
-    from .skew import routed_anti_join
-
-    kept = (
-        routed_anti_join(profiles, suspicious, ["os", "uuid"])
-        .filter(F.substring(F.col("uuid"), 8, 1) == "0")
-        .select("os", "uuid", "first_at", F.size("apps").alias("app_count"), "apps")
-    )
-
-    device_apps = kept.select(
-        "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
-    )
     matched = (
-        device_apps.join(F.broadcast(iapp), "bundle", "inner")
+        kept_apps.join(F.broadcast(iapp), "bundle", "inner")
         .groupBy("os", "uuid")
         .agg(
             F.count(F.lit(1)).alias("intersect_app"),
@@ -71,102 +73,6 @@ def feature_inputs(
     )
 
     out = (
-        kept.drop("apps")
-        .join(matched, ["os", "uuid"], "left")
-        .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
-        .crossJoin(F.broadcast(totals))
-    )
-    return out.select(
-        "os",
-        "uuid",
-        "first_at",
-        "app_count",
-        "intersect_app",
-        "intersect_purchaser",
-        "intersect_amount",
-        (F.col("intersect_app") / (F.lit(1) + F.col("iapp_size"))).alias("f486"),
-        (F.col("intersect_purchaser") / (F.lit(1) + F.col("total_purchasers"))).alias("f586"),
-        (F.col("intersect_app") / (F.lit(1) + F.col("app_count"))).alias("f686"),
-        (F.col("intersect_amount") / (F.lit(1) + F.col("total_amount_sum"))).alias("f777"),
-    )
-
-
-def feature_pipeline_from_valid(
-    valid_logs: DataFrame,
-    iapp: DataFrame,
-    thresholds=None,
-) -> DataFrame:
-    """Fused flat-path pipeline: suspicious detection AND feature assembly
-    off ONE shared per-device aggregate — a single shuffle over the fact
-    produces (first_at, app_count, geo_cnt, total_bids) for both consumers.
-    Output identical to the nested
-    feature_inputs(p, suspicious_ids(p, app_profiles(p), t), iapp) over
-    p = device_profiles(v) — oracle- and test-checked."""
-    from .suspicious import SuspiciousThresholds
-
-    t = thresholds or SuspiciousThresholds()
-    from ..functions._cache import hold
-
-    device_apps = hold(
-        valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle")).distinct(),
-        # lazy hold (r13): the first consumer's action fills the cache;
-        # concurrent fills are serialized per partition by the block
-        # manager, so an upfront count is pure added latency (see hold())
-    )
-
-    dev_stats = valid_logs.groupBy("os", "uuid").agg(
-        F.min("received_at").alias("first_at"),
-        F.countDistinct("app_bundle").cast("int").alias("app_count"),
-        F.countDistinct("geo_country", "geo_region").alias("geo_cnt"),
-        F.count(F.lit(1)).alias("total_bids"),
-    )
-
-    popular = (
-        device_apps.groupBy("bundle")
-        .agg(F.countDistinct("os", "uuid").alias("user_count"))
-        .filter(F.col("user_count") > t.user_count)
-        .select("bundle")
-    )
-    # J1 capacity routing (SURVEY §4 ladder): device_apps is HELD, so the
-    # router's probe is a cache read. Board fixtures → rung 1 (broadcast).
-    from .skew import routed_anti_join
-
-    unpopular_counts = (
-        routed_anti_join(device_apps, popular, "bundle")
-        .groupBy("os", "uuid")
-        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
-    )
-
-    kept = (
-        dev_stats.join(unpopular_counts, ["os", "uuid"], "left")
-        .withColumn("unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0)))
-        .filter(
-            ~(
-                (F.col("geo_cnt") > t.geo_count)
-                | (F.col("unpopular_apps") > t.app_count)
-                | (F.col("total_bids") > t.bid_log_count)
-            )
-        )
-        .filter(F.substring(F.col("uuid"), 8, 1) == "0")
-        .select("os", "uuid", "first_at", "app_count")
-    )
-
-    matched = (
-        device_apps.join(kept.select("os", "uuid"), ["os", "uuid"], "left_semi")
-        .join(F.broadcast(iapp), "bundle", "inner")
-        .groupBy("os", "uuid")
-        .agg(
-            F.count(F.lit(1)).alias("intersect_app"),
-            F.sum("num_purchasers").alias("intersect_purchaser"),
-            F.sum("total_amount").alias("intersect_amount"),
-        )
-    )
-    totals = iapp.agg(
-        F.count(F.lit(1)).alias("iapp_size"),
-        F.coalesce(F.sum("num_purchasers"), F.lit(0)).alias("total_purchasers"),
-        F.coalesce(F.sum("total_amount"), F.lit(0)).alias("total_amount_sum"),
-    )
-    out = (
         kept.join(matched, ["os", "uuid"], "left")
         .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
         .crossJoin(F.broadcast(totals))
@@ -184,3 +90,65 @@ def feature_pipeline_from_valid(
         (F.col("intersect_app") / (F.lit(1) + F.col("app_count"))).alias("f686"),
         (F.col("intersect_amount") / (F.lit(1) + F.col("total_amount_sum"))).alias("f777"),
     )
+
+
+def feature_inputs(
+    profiles: DataFrame,
+    suspicious: DataFrame,
+    iapp: DataFrame,
+) -> DataFrame:
+    """Per kept device: intersection aggregates + ratio features, from
+    nested DeviceProfiles and the suspicious blacklist. The adapter does
+    the blacklist anti-join and the sample, then hands the kept devices
+    and their exploded bundles to assemble_features."""
+    from .skew import routed_anti_join
+
+    kept = (
+        routed_anti_join(profiles, suspicious, ["os", "uuid"])
+        .filter(in_sample())
+        .select("os", "uuid", "first_at", F.size("apps").alias("app_count"), "apps")
+    )
+    kept_apps = kept.select(
+        "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
+    )
+    return assemble_features(kept.drop("apps"), kept_apps, iapp)
+
+
+def feature_pipeline_from_valid(
+    valid_logs: DataFrame,
+    iapp: DataFrame,
+    thresholds: SuspiciousThresholds = SuspiciousThresholds(),
+) -> DataFrame:
+    """feature_inputs(p, suspicious_ids(p, app_profiles(p), t), iapp) over
+    p = device_profiles(valid_logs), fused on the flat validated rows: ONE
+    shared per-device aggregate (first_at, app_count, geo_cnt, total_bids)
+    feeds both the suspicious.score_devices core, whose rule set is
+    negated here, and the assemble_features core."""
+    from ..functions._cache import hold
+
+    device_apps = hold(
+        valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle")).distinct(),
+        # lazy hold (r13): the first consumer's action fills the cache;
+        # concurrent fills are serialized per partition by the block
+        # manager, so an upfront count is pure added latency (see hold())
+    )
+
+    dev_stats = valid_logs.groupBy("os", "uuid").agg(
+        F.min("received_at").alias("first_at"),
+        F.countDistinct("app_bundle").cast("int").alias("app_count"),
+        F.countDistinct("geo_country", "geo_region").alias("geo_cnt"),
+        F.count(F.lit(1)).alias("total_bids"),
+    )
+    # J1 capacity routing (SURVEY §4 ladder): device_apps is HELD, so the
+    # router's probe is a cache read. Board fixtures → rung 1 (broadcast).
+    app_users = device_apps.groupBy("bundle").agg(
+        F.countDistinct("os", "uuid").alias("user_count")
+    )
+    kept = (
+        score_devices(dev_stats, device_apps, app_users, thresholds)
+        .filter(~is_suspicious(thresholds))
+        .filter(in_sample())
+        .select("os", "uuid", "first_at", "app_count")
+    )
+    kept_apps = device_apps.join(kept.select("os", "uuid"), ["os", "uuid"], "left_semi")
+    return assemble_features(kept, kept_apps, iapp)

@@ -14,13 +14,19 @@ The popular-apps side input (Beam View.asList) becomes a broadcast
 left-anti join — the dimension is small (distinct bundles), so no shuffle
 of the device side; at 100 TB the detail side streams through
 map-side-only stages.
+
+One implementation, thin adapters: is_suspicious holds the rules and
+score_devices the scoring (popular set, routed anti-join, unpopular
+count, left join). suspicious_ids feeds them from nested DeviceProfiles,
+suspicious_ids_from_valid and features.feature_pipeline_from_valid from
+flat validated rows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,6 +40,41 @@ class SuspiciousThresholds:
     bid_log_count: int = 10  # max total bids
 
 
+def is_suspicious(t: SuspiciousThresholds) -> Column:
+    """The three-rule disjunction over a scored device row (columns
+    geo_cnt, unpopular_apps, total_bids; see score_devices)."""
+    return (
+        (F.col("geo_cnt") > t.geo_count)
+        | (F.col("unpopular_apps") > t.app_count)
+        | (F.col("total_bids") > t.bid_log_count)
+    )
+
+
+def score_devices(
+    dev_stats: DataFrame,
+    device_apps: DataFrame,
+    app_users: DataFrame,
+    t: SuspiciousThresholds,
+) -> DataFrame:
+    """The scoring core every entry point shares: `dev_stats` (os, uuid,
+    geo_cnt, total_bids, any further columns) gains `unpopular_apps`, the
+    number of the device's `device_apps` (os, uuid, bundle) pairs whose
+    bundle is not popular. Popular means user_count > t.user_count in
+    `app_users` (bundle, user_count). Filter the result with
+    is_suspicious(t)."""
+    popular = app_users.filter(F.col("user_count") > t.user_count).select("bundle")
+    from .skew import routed_anti_join
+
+    unpopular_counts = (
+        routed_anti_join(device_apps, popular, "bundle")
+        .groupBy("os", "uuid")
+        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
+    )
+    return dev_stats.join(unpopular_counts, ["os", "uuid"], "left").withColumn(
+        "unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0))
+    )
+
+
 def suspicious_ids(
     profiles: DataFrame,
     app_profiles: DataFrame,
@@ -43,23 +84,10 @@ def suspicious_ids(
 
     `profiles` is the nested DeviceProfile frame; `app_profiles` the nested
     AppProfile frame (J4: the aggregate side is broadcast back onto the
-    per-device side, mirroring the reference's side-input pattern).
-    """
-    t = thresholds
-    popular = app_profiles.filter(F.col("user_count") > t.user_count).select("bundle")
-
-    device_apps = profiles.select(
-        "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
-    )
-    from .skew import routed_anti_join
-
-    unpopular_counts = (
-        routed_anti_join(device_apps, popular, "bundle")
-        .groupBy("os", "uuid")
-        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
-    )
-
-    base = profiles.select(
+    per-device side, mirroring the reference's side-input pattern). The
+    adapter reads the per-device stats and device-app pairs out of the
+    nested rows and hands them to score_devices."""
+    dev_stats = profiles.select(
         "os",
         "uuid",
         F.size("geos").alias("geo_cnt"),
@@ -68,29 +96,25 @@ def suspicious_ids(
             " aggregate(map_values(a.count_per_exchange), 0L, (x, y) -> x + y))"
         ).alias("total_bids"),
     )
-
-    scored = base.join(unpopular_counts, ["os", "uuid"], "left").withColumn(
-        "unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0))
+    device_apps = profiles.select(
+        "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
     )
-
-    return scored.filter(
-        (F.col("geo_cnt") > t.geo_count)
-        | (F.col("unpopular_apps") > t.app_count)
-        | (F.col("total_bids") > t.bid_log_count)
-    ).select("os", "uuid")
+    return (
+        score_devices(dev_stats, device_apps, app_profiles, thresholds)
+        .filter(is_suspicious(thresholds))
+        .select("os", "uuid")
+    )
 
 
 def suspicious_ids_from_valid(
     valid_logs: DataFrame,
     thresholds: SuspiciousThresholds = SuspiciousThresholds(),
 ) -> DataFrame:
-    """Scale-optimized formulation straight from the flat validated rows —
-    identical output to suspicious_ids(device_profiles(v), app_profiles(...))
-    (oracle- and test-checked) with zero nested-array construction: every
-    stage is a codegen hash agg or broadcast join on the one scan. geo
-    count is countDistinct(country, region); total bids is the row count
-    (each valid row contributes exactly one count_per_exchange increment)."""
-    t = thresholds
+    """suspicious_ids straight from the flat validated rows: the same
+    score_devices core, fed without nested-array construction. Every stage
+    is a codegen hash agg or broadcast join on the one scan. geo count is
+    countDistinct(country, region); total bids is the row count (each
+    valid row contributes exactly one count_per_exchange increment)."""
     from ..functions._cache import hold
 
     # ONE scan: the level-1 agg does the big cardinality reduction (bid-log
@@ -113,35 +137,20 @@ def suspicious_ids_from_valid(
         # concurrent fills are serialized per partition by the block
         # manager, so an upfront count is pure added latency (see hold())
     )
-
-    popular = (
-        level1.groupBy("bundle")
-        .agg(F.count(F.lit(1)).alias("user_count"))
-        .filter(F.col("user_count") > t.user_count)
-        .select("bundle")
-    )
-    # J1 capacity routing: popular derives from the HELD level1, so the
-    # router's broadcast-rung probe (one count of the key projection) is a
-    # cache read, not a recompute. On every board fixture the popular set is
-    # thousands of keys → rung 1 (broadcast), the plan this query always had.
-    from .skew import routed_anti_join
-
-    unpopular_counts = (
-        routed_anti_join(level1, popular, "bundle")
-        .groupBy("os", "uuid")
-        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
-    )
+    # J1 capacity routing: the popular set derives from the HELD level1, so
+    # the router's broadcast-rung probe (one count of the key projection)
+    # is a cache read, not a recompute. On every board fixture the popular
+    # set is thousands of keys → rung 1 (broadcast), the plan this query
+    # always had.
+    app_users = level1.groupBy("bundle").agg(F.count(F.lit(1)).alias("user_count"))
     dev_stats = level1.groupBy("os", "uuid").agg(
         F.size(F.array_distinct(F.flatten(F.collect_list("geos")))).cast(
             "long"
         ).alias("geo_cnt"),
         F.sum("n").alias("total_bids"),
     )
-    scored = dev_stats.join(unpopular_counts, ["os", "uuid"], "left").withColumn(
-        "unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0))
+    return (
+        score_devices(dev_stats, level1, app_users, thresholds)
+        .filter(is_suspicious(thresholds))
+        .select("os", "uuid")
     )
-    return scored.filter(
-        (F.col("geo_cnt") > t.geo_count)
-        | (F.col("unpopular_apps") > t.app_count)
-        | (F.col("total_bids") > t.bid_log_count)
-    ).select("os", "uuid")

@@ -22,16 +22,8 @@ from ..sources.bidlogs import load_bid_logs, load_iapp
 from ..sources.tables import register_tables
 from ..operators.validate import valid_bid_logs
 from ..operators.device_profile import device_profiles, flatten_device_profiles
-from ..operators.app_profile import (
-    app_profile_slots_from_valid,
-    app_profiles,
-    flatten_app_profiles,
-)
-from ..operators.suspicious import (
-    SuspiciousThresholds,
-    suspicious_ids,
-    suspicious_ids_from_valid,
-)
+from ..operators.app_profile import app_profile_slots_from_valid
+from ..operators.suspicious import SuspiciousThresholds, suspicious_ids_from_valid
 from ..operators.features import feature_pipeline_from_valid
 from ..operators.inference import predict
 from .relational import RELATIONAL_SQL
@@ -101,24 +93,27 @@ def q_device_profile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_app_profiles_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2-A5: per-app distinct-user counts; slot=-1 is the user-count leg.
-    Flat-path formulation (no nested detour); equivalence to
-    flatten_app_profiles(app_profiles(...)) is test-checked."""
+    The flat adapter over operators/app_profile.py's slot-count core, the
+    one the jobs' app_profiles re-nests."""
     return app_profile_slots_from_valid(_valid(spark, sf_dir))
 
 
 def q_suspicious_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F8/J1/R1: rule-based bot detection (flat-path formulation)."""
+    """F8/J1/R1: rule-based bot detection. The flat adapter over
+    operators/suspicious.py's rules and scoring core, the ones the jobs'
+    suspicious_ids uses."""
     return suspicious_ids_from_valid(_valid(spark, sf_dir), QUERY_THRESHOLDS)
 
 
 def q_feature_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/J3/F6/A6/A7: blacklist anti-join, 1/16 sample, IAPP intersection
-    aggregates + the 4 ratio features (flat-path formulation).
+    aggregates + the 4 ratio features.
 
-    Fused formulation: ONE shared per-device aggregate feeds both the
-    suspicious rules and the feature assembly (operators/features.py::
-    feature_pipeline_from_valid); the validated frame is persisted so the
-    scan+derive chain runs once."""
+    operators/features.py::feature_pipeline_from_valid feeds ONE shared
+    per-device aggregate to the suspicious scoring core and the feature
+    assembly core, the ones the jobs' suspicious_ids and feature_inputs
+    use; the validated frame is persisted so the scan+derive chain runs
+    once."""
     from ..functions._cache import hold
 
     v = hold(_valid(spark, sf_dir))

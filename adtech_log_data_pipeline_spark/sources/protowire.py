@@ -284,7 +284,9 @@ def decode_message(buf: bytes, spec: Spec) -> dict[str, Any]:
             if wt != _WIRE_VARINT:
                 raise WireError(f"{spec.name}.{f.name}: expected varint")
             raw, pos = _read_varint(buf, pos)
-            msg[f.name] = _signed32(raw) if f.kind == "int32" else _signed64(raw)
+            # enums are int32 on the wire: Java's readEnum keeps the low
+            # 32 bits of an over-long varint, as _wirevec does
+            msg[f.name] = _signed64(raw) if f.kind == "int64" else _signed32(raw)
         elif f.kind == "double":
             if wt != _WIRE_I64:
                 raise WireError(f"{spec.name}.{f.name}: expected fixed64")

@@ -20,9 +20,10 @@ dominated and useless as a regression gate):
   load looks identical to contention) is published in the totals
   trailer, so a noisy-neighbor window is visible in the artifact itself
   instead of being indistinguishable from a plan regression.
-* DELTAS VS THE PRIOR ROUND: the newest BENCH_r*.json's recorded tail is
-  parsed and per-query ratios are summarized (median + top regressions)
-  in the trailer — the artifact carries its own regression verdict.
+* DELTAS VS THE PRIOR ROUND: the latest same-sf entry of
+  BENCH_PERQUERY.jsonl (the prior run's full per-query map) is compared
+  and per-query ratios are summarized (median + top regressions) in the
+  trailer — the artifact carries its own regression verdict.
 * best-of-2 per query within a chunk (cache-cleared between runs), as
   before: the min of two cold-cache runs is attributable to the plan.
 * REGRESSIONS CONFIRMED BEFORE PUBLICATION (round-11; the round-10
@@ -37,7 +38,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
 import time
@@ -414,45 +414,6 @@ def _record_full_map(sf: float | None, timings: dict[str, float]) -> None:
     os.replace(tmp, path)
 
 
-def _prev_round_tail_queries() -> tuple[str | None, dict[str, float]]:
-    """Parse the newest BENCH_r*.json's recorded stdout tail into the
-    per-query map it managed to capture (the driver stores a bounded
-    tail, so this is the LAST ~70-120 queries of the prior round — enough
-    for a regression signal, and exactly what tools/bench_diff.py uses)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    benches = sorted(
-        f for f in os.listdir(here) if re.fullmatch(r"BENCH_r\d+\.json", f)
-    )
-    if not benches:
-        return None, {}
-    path = os.path.join(here, benches[-1])
-    try:
-        with open(path, encoding="utf-8") as fh:
-            tail = json.load(fh).get("tail", "") or ""
-    except (OSError, ValueError):
-        return benches[-1], {}
-    # The totals trailer's delta_vs_prev object maps REAL query names to
-    # ratios (top_regressions), which would overwrite that query's seconds
-    # if parsed — drop everything from the trailer's delta record on.
-    cut = tail.find('"delta_vs_prev"')
-    if cut != -1:
-        tail = tail[:cut]
-    out: dict[str, float] = {}
-    for m in re.finditer(r'"([a-z0-9_]+)":\s*([0-9.]+)', tail):
-        name, val = m.group(1), m.group(2)
-        if name in (
-            "value", "n_queries", "parity7", "sf", "chunks",
-            "median_ratio", "n_common", "steal_pct",
-            "chunk", "steal", "rerun_steal",
-        ):
-            continue
-        try:
-            out[name] = float(val)
-        except ValueError:
-            pass
-    return benches[-1], out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -561,12 +522,9 @@ def main() -> None:
             )
         timings.update(chunk)
 
-    # regression summary: prefer the full per-query log of a prior run
-    # (whole-board baseline); fall back to the prior BENCH tail (~60
-    # queries) when no same-sf full map exists yet
+    # regression summary against the full per-query log of a prior run
+    # (whole-board baseline)
     prev_name, prev = _prev_full_map(float(sf) if sf else None)
-    if not prev:
-        prev_name, prev = _prev_round_tail_queries()
     common = sorted(set(prev) & set(timings))
     delta: dict[str, object] = {"prev": prev_name, "n_common": len(common)}
     if common:

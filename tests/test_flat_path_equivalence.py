@@ -1,5 +1,6 @@
-"""The scale-optimized flat-path operators must produce exactly the same
-results as the nested reference-shaped pipeline (profiles -> explode)."""
+"""The flat entry points (over validated rows) must produce exactly the
+same results as the nested reference-shaped ones (profiles -> explode).
+Both feed the same per-stage cores, so this checks the input adapters."""
 
 from adtech_log_data_pipeline_spark.operators import (
     SuspiciousThresholds,

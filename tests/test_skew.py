@@ -178,7 +178,7 @@ def _zipf_valid_bid_logs(spark, n=120_000, n_bundles=1_000, n_devices=30_000):
 
 def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     """The REAL A5 skew surface: suspicious_ids' popularity lookup is a
-    bundle-keyed anti-join (operators/suspicious.py:119-125). The engine
+    bundle-keyed anti-join (operators/suspicious.py::score_devices). The engine
     broadcasts the popular set — skew-immune — but at web scale a popular
     set beyond broadcast capacity degrades to a shuffle join keyed by
     bundle, and a zipf-hot bundle then skews one partition >10x. This
@@ -209,7 +209,7 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     from adtech_log_data_pipeline_spark.operators.validate import valid_bid_logs
 
     v = valid_bid_logs(_zipf_valid_bid_logs(spark, n=400_000, n_devices=100_000))
-    # the operator's level-0/level-1 reduction (suspicious.py:101-112),
+    # the operator's level-0/level-1 reduction (suspicious_ids_from_valid),
     # sans hold(): device-app relation with one row per (os, uuid, bundle)
     level1 = (
         v.groupBy("os", "uuid", F.col("app_bundle").alias("bundle"))
@@ -246,6 +246,8 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     # enough reducers that the median partition is small vs the hot one
     # (skew detection compares against factor x MEDIAN partition size)
     conf.set("spark.sql.shuffle.partitions", "32")
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keySet().toArray())
     try:
         # the precomputed popular set, as read back from storage
         popular = (
@@ -267,6 +269,10 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
         ).count()
         assert n_shuffled == n_broadcast > 0
     finally:
+        # the localCheckpoint is a persistent RDD no held frame covers
+        rdds = jsc.getPersistentRDDs()
+        for rdd_id in set(rdds.keySet().toArray()) - persisted_before:
+            rdds.get(rdd_id).unpersist(True)
         for k, v2 in saved.items():
             if v2 is None:
                 conf.unset(k)

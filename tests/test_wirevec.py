@@ -8,6 +8,9 @@ round's bit-exactness contracts:
     the scalar malformed-drop and default-instance-drop semantics, on
     canonical AND non-canonical (unknown-field, truncated, invalid-UTF-8)
     payloads;
+  * the same decode equality as hypothesis properties, over arbitrary
+    bytes and over canonical BidLogs with one byte-level mutation each,
+    including which rows drop;
   * crc32c_many == crc32c per element on empty/skewed/over-cap batches
     (r13 ADVICE #2/#4), and frame_records_many == concat of per-record
     framing, roundtripped through _unframe_stream with corruption raising.
@@ -19,9 +22,11 @@ import io
 import random
 import string
 
+import hypothesis.strategies as st
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
 
 from adtech_log_data_pipeline_spark.sources import tfrecord as tfr
 from adtech_log_data_pipeline_spark.sources._wirevec import (
@@ -232,3 +237,74 @@ def test_frame_records_many_roundtrip_and_corruption():
     corrupt[16] ^= 0x40
     with pytest.raises(tfr.TFRecordError):
         tfr._unframe_stream(bytes(corrupt))
+
+
+# --- differential properties: vectorized decode vs the scalar decoder ------
+
+_int32 = st.integers(-(2**31), 2**31 - 1)
+_int64 = st.integers(-(2**63), 2**63 - 1)
+
+_row_strategy = st.fixed_dictionaries(
+    {
+        "bid_id": st.text(max_size=40),
+        "exchange": _int32,
+        "bid_result": _int32,
+        "bid_price": _int32,
+        "received_at": _int64,
+        "processed_at": _int64,
+        "device_os": st.text(max_size=8),
+        "device_ifa": st.text(max_size=40),
+        "app_bundle": st.text(max_size=140),
+        "geo_country": st.text(max_size=3),
+        "geo_region": st.text(max_size=8),
+    }
+)
+
+
+@st.composite
+def _mutated(draw, payload: bytes) -> bytes:
+    """One structural edit of a payload: flip, insert or delete a byte,
+    truncate, or splice in random bytes."""
+    op = draw(st.sampled_from(["keep", "flip", "insert", "delete", "truncate", "splice"]))
+    if op == "keep" or (not payload and op in ("flip", "delete")):
+        return payload
+    i = draw(st.integers(0, max(len(payload) - 1, 0)))
+    if op == "flip":
+        return payload[:i] + bytes([payload[i] ^ draw(st.integers(1, 255))]) + payload[i + 1:]
+    if op == "insert":
+        return payload[:i] + bytes([draw(st.integers(0, 255))]) + payload[i:]
+    if op == "delete":
+        return payload[:i] + payload[i + 1:]
+    if op == "truncate":
+        return payload[:i]
+    return payload[:i] + draw(st.binary(max_size=12)) + payload[i:]
+
+
+_mutated_payloads = st.lists(
+    _row_strategy.map(lambda r: _scalar_encode([r])[0]).flatmap(_mutated),
+    max_size=12,
+)
+
+
+def _assert_decoders_agree(payloads: list[bytes]) -> None:
+    """Row for row: the batch decode equals the scalar decode, and every
+    payload alone is kept or dropped by both decoders alike."""
+    for drop_default in (True, False):
+        want = _scalar_decode(payloads, drop_default)
+        got = decode_bidlog_rows(payloads, drop_default_instance=drop_default)
+        assert _cols_to_rows(got) == want
+        for p in payloads:
+            one = decode_bidlog_rows([p], drop_default_instance=drop_default)
+            assert _cols_to_rows(one) == _scalar_decode([p], drop_default), p
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+@given(payloads=st.lists(st.binary(max_size=80), max_size=12))
+def test_decode_bidlog_rows_matches_scalar_on_arbitrary_bytes(payloads):
+    _assert_decoders_agree(payloads)
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+@given(payloads=_mutated_payloads)
+def test_decode_bidlog_rows_matches_scalar_on_mutated_bidlogs(payloads):
+    _assert_decoders_agree(payloads)

@@ -44,6 +44,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from adtech_log_data_pipeline_spark.functions._cache import release_cached
+    from adtech_log_data_pipeline_spark.functions._hygiene import trim_status_store
     from adtech_log_data_pipeline_spark.plans.queries import QUERIES
     from adtech_log_data_pipeline_spark.session import get_spark
 
@@ -62,7 +63,7 @@ def main() -> None:
         # AppStatusStore job count — survives job-group-less submission
         # (statusTracker.getJobIdsForGroup only sees grouped jobs). The
         # inter-query hygiene trims this store, so only the within-query
-        # delta is meaningful.
+        # delta is meaningful, and the baseline is read after a trim.
         try:
             return sc._jsc.sc().statusStore().jobsList(None).size()
         except Exception:
@@ -101,6 +102,10 @@ def main() -> None:
             jobs0 = jobs1 = 0
             for i in range(args.runs):
                 sc.setJobDescription(f"profile:{name}:run{i}")
+                # the trim the query's hygiene wrapper makes first, made
+                # here before the baseline count: the wrapper's own trim
+                # then finds nothing completed that jobs0 counted
+                trim_status_store(spark)
                 jobs0 = _n_jobs()
                 n0, ns0 = _codegen()
                 t0 = time.time()
