@@ -33,11 +33,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Concurrency contract: entries may be interleaved freely within a
-    session (build A, build B, consume both — streaming results drop
-    their memory-sink view eagerly and stay consumable), but each
-    INDIVIDUAL query is single-flight: running the same query twice
-    concurrently shares one owner tag, so its hygiene pass may reclaim
-    the other in-flight run's sink view."""
+    session (build A, build B, consume both). A streaming result names
+    its memory-sink view by process id and sequence number and drops
+    the view before it returns, so the result stays consumable and no
+    other query's hygiene pass can reach it."""
     from adtech_log_data_pipeline_spark.plans.queries import QUERIES
 
     return dict(QUERIES)

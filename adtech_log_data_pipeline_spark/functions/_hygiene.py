@@ -14,42 +14,44 @@ construction, so a session the engine did NOT create (the driver's
 vanilla session) cannot be fixed by conf.
 
 ``trim_status_store`` therefore deletes completed-query status entries
-directly through the public KVStore API (ElementTrackingStore.delete /
-removeAllByIndexValues) — the same calls the listeners' own cleanup
-paths use, just not gated on the retention caps. It runs between
+directly through the public KVStore API
+(ElementTrackingStore.removeAllByIndexValues) — the call the listeners'
+own cleanup paths use, just not gated on the retention caps. It runs between
 queries (wired into plans/queries.py::_hygienic), when the previous
 query's executions/jobs/stages are complete and hence no longer in any
 listener's live map (entries still live would be re-written on the next
 event, which is why trimming mid-query would be both racy and useless).
 
-py4j pitfalls this module codifies:
-  * java.lang.Long round-trips through py4j as python int and returns as
-    Integer — a delete(cls, Integer) silently misses a Long-keyed entry.
-    Long-keyed classes (SQL executions, plan graphs) are therefore
-    deleted via Guava ``Longs.asList(long[])`` built from a primitive
-    long[] that python never element-accesses.
-  * Stage natural keys are int[2] (stageId, attemptId); py4j passes
-    primitive int arrays faithfully, and the per-stage index name on
-    task/summary/quantile wrappers is "stage".
+py4j round trips are the cost (each ~0.1-0.3 ms), so:
+  * the Class objects, natural-key accessors and JVM helpers are looked
+    up once per py4j gateway (``_handles``);
+  * id-keyed wrappers (jobs and operation graphs: int; SQL executions
+    and plan graphs: long) are deleted with ONE removeAllByIndexValues
+    over the id range the store holds, formed in the JVM
+    (``IntStream``/``LongStream.rangeClosed(first, last).boxed()``). The
+    stream matches the key type, which matters: an Integer never equals
+    a Long-keyed entry;
+  * stage natural keys are int[2] (stageId, attemptId); they are read
+    through the KVTypeInfo accessor and passed back unchanged as the
+    "stage" index values of the task/summary/quantile wrappers and as
+    the stages' own natural keys, one bulk call per class.
 
 Best-effort by contract: every step is exception-guarded, the function
-never raises, and $SPARK_GRAFT_NO_STATUS_TRIM=1 disables it. Cost is a
-few dozen py4j calls (the per-type entry counts between trims are tens;
-the thousands of task entries go through ONE bulk removeAllByIndexValues
-per type). At 100 TB this concern is driver-only and identical: status
-retention is sized per-application, not per-data."""
+never raises, and $SPARK_GRAFT_NO_STATUS_TRIM=1 disables it. What is
+left per stage is three py4j calls to collect its key; every class costs
+one count when empty and three more calls when not. At 100 TB this
+concern is driver-only and identical: status retention is sized
+per-application, not per-data."""
 
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
-_INT_KEYED = (
-    # iterate + delete by natural key (Integer via py4j int — exact match)
+_ID_KEYED = (
+    # natural key is an int or long id
     "org.apache.spark.status.JobDataWrapper",
     "org.apache.spark.status.RDDOperationGraphWrapper",
-)
-_LONG_KEYED = (
-    # bulk-delete via Guava Longs.asList (see module docstring)
     "org.apache.spark.sql.execution.ui.SQLExecutionUIData",
     "org.apache.spark.sql.execution.ui.SparkPlanGraphWrapper",
 )
@@ -62,6 +64,46 @@ _STAGE_INDEXED = (
 )
 _STAGE_CLS = "org.apache.spark.status.StageDataWrapper"
 
+#: (py4j gateway, handles); see _handles
+_HANDLES: tuple | None = None
+
+
+def _handles(spark) -> SimpleNamespace:
+    """The JVM objects a trim uses, looked up once per py4j gateway and
+    again when the gateway restarts. A class that does not load is left
+    out."""
+    global _HANDLES
+    gw = spark.sparkContext._gateway
+    if _HANDLES is None or _HANDLES[0] is not gw:
+        jvm = spark._jvm
+        stream = jvm.java.util.stream
+
+        def load(name):
+            try:
+                cls = jvm.java.lang.Class.forName(name)
+                key = jvm.org.apache.spark.util.kvstore.KVTypeInfo(cls).getAccessor("__main__")
+                return name.rsplit(".", 1)[1], cls, key
+            except Exception:
+                return None
+
+        ids = []
+        for short, cls, key in filter(None, map(load, _ID_KEYED)):
+            int_key = key.getType().getName() in ("int", "java.lang.Integer")
+            ids.append((short, cls, key, stream.IntStream if int_key else stream.LongStream))
+        _HANDLES = (
+            gw,
+            SimpleNamespace(
+                stage=load(_STAGE_CLS),
+                stage_indexed=[h[:2] for h in filter(None, map(load, _STAGE_INDEXED))],
+                ids=ids,
+                to_list=stream.Collectors.toList(),
+                iterables=jvm.com.google.common.collect.Iterables,
+                lists=jvm.com.google.common.collect.Lists,
+                array_list=jvm.java.util.ArrayList,
+            ),
+        )
+    return _HANDLES[1]
+
 
 def trim_status_store(spark) -> dict[str, int] | None:
     """Delete completed-query status-store entries; returns the per-class
@@ -71,94 +113,49 @@ def trim_status_store(spark) -> dict[str, int] | None:
     if os.environ.get("SPARK_GRAFT_NO_STATUS_TRIM"):
         return None
     try:
-        jvm = spark._jvm
-        gw = spark.sparkContext._gateway
+        h = _handles(spark)
         store = spark.sparkContext._jsc.sc().statusStore().store()
     except Exception:
         return None
 
-    def jc(name):
-        return jvm.java.lang.Class.forName(name)
-
-    def natural_keys(cls):
-        ti = jvm.org.apache.spark.util.kvstore.KVTypeInfo(cls)
-        acc = ti.getAccessor("__main__")
-        it = store.view(cls).closeableIterator()
-        keys = []
-        try:
-            while it.hasNext():
-                keys.append(acc.get(it.next()))
-        finally:
-            it.close()
-        return keys
-
     deleted: dict[str, int] = {}
 
+    def bulk_delete(short, cls, index, values):
+        """One removeAllByIndexValues over ``values()``, skipped on an
+        empty class; records the exact number of entries it removed."""
+        try:
+            n = store.count(cls)
+            if n:
+                store.removeAllByIndexValues(cls, index, values())
+                n -= store.count(cls)
+            deleted[short] = n
+        except Exception:
+            pass
+
     # 1) stage keys first: they drive the bulk task/summary deletion
-    try:
-        stage_cls = jc(_STAGE_CLS)
-        it = store.view(stage_cls).closeableIterator()
-        stage_keys = []
+    if h.stage is not None:
+        short, stage_cls, stage_key = h.stage
         try:
-            while it.hasNext():
-                info = it.next().info()
-                stage_keys.append((info.stageId(), info.attemptId()))
-        finally:
-            it.close()
-        if stage_keys:
-            vals = jvm.java.util.ArrayList()
-            jarrs = []
-            for sid, att in stage_keys:
-                arr = gw.new_array(jvm.int, 2)
-                arr[0], arr[1] = sid, att
-                vals.add(arr)
-                jarrs.append(arr)
-            for name in _STAGE_INDEXED:
-                try:
-                    cls = jc(name)
-                    n = store.count(cls)
-                    store.removeAllByIndexValues(cls, "stage", vals)
-                    deleted[name.rsplit(".", 1)[1]] = n - store.count(cls)
-                except Exception:
-                    pass
-            n = 0
-            for arr in jarrs:
-                try:
-                    store.delete(stage_cls, arr)
-                    n += 1
-                except Exception:
-                    pass
-            deleted["StageDataWrapper"] = n
-    except Exception:
-        pass
-
-    # 2) integer-keyed wrappers: per-entry delete (counts are tens)
-    for name in _INT_KEYED:
-        try:
-            cls = jc(name)
-            n = 0
-            for k in natural_keys(cls):
-                store.delete(cls, k)
-                n += 1
-            deleted[name.rsplit(".", 1)[1]] = n
+            stages = h.lists.newArrayList(store.view(stage_cls))
+            keys = h.array_list()
+            for i in range(stages.size()):
+                keys.add(stage_key.get(stages.get(i)))
         except Exception:
             pass
+        else:
+            for name, cls in h.stage_indexed:
+                bulk_delete(name, cls, "stage", lambda: keys)
+            bulk_delete(short, stage_cls, "__main__", lambda: keys)
 
-    # 3) long-keyed SQL wrappers: one bulk call over a primitive long[]
-    for name in _LONG_KEYED:
-        try:
-            cls = jc(name)
-            ids = natural_keys(cls)
-            if not ids:
-                deleted[name.rsplit(".", 1)[1]] = 0
-                continue
-            arr = gw.new_array(jvm.long, len(ids))
-            for i, x in enumerate(ids):
-                arr[i] = x
-            lst = jvm.com.google.common.primitives.Longs.asList(arr)
-            store.removeAllByIndexValues(cls, "__main__", lst)
-            deleted[name.rsplit(".", 1)[1]] = len(ids)
-        except Exception:
-            pass
+    # 2) id-keyed wrappers: one bulk call over the id range in the store
+    for short, cls, key, id_stream in h.ids:
+
+        def id_range(cls=cls, key=key, id_stream=id_stream):
+            view = store.view(cls)
+            first = key.get(h.iterables.getFirst(view, None))
+            last = key.get(h.iterables.getLast(view))
+            return id_stream.rangeClosed(first, last).boxed().collect(h.to_list)
+
+        bulk_delete(short, cls, "__main__", id_range)
 
     return deleted

@@ -72,8 +72,22 @@ def _non_blank(name: str) -> Column:
     return F.col(name).rlike(r"\S")
 
 
+#: (py4j gateway, predicate): building the Column takes ~40 py4j calls,
+#: so it is built once per gateway and rebuilt when the gateway restarts
+_VALID: tuple | None = None
+
+
 def is_valid_bidlog() -> Column:
     """The 11-clause validity predicate over a bid_logs-schema DataFrame."""
+    from pyspark import SparkContext
+
+    global _VALID
+    if _VALID is None or _VALID[0] is not SparkContext._gateway:
+        _VALID = (SparkContext._gateway, _valid_bidlog())
+    return _VALID[1]
+
+
+def _valid_bidlog() -> Column:
     bid = F.col("bid_result") == F.lit(1)  # BidResult.BID
     return (
         F.col("exchange").isin(*VALID_EXCHANGES)

@@ -174,7 +174,7 @@ def _relational(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def _hygienic(
-    fn: Callable[[SparkSession, str], DataFrame], query_name: str
+    fn: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
     """Release the PREVIOUS query's held/persisted intermediates AND its
     app-status KVStore residue before building the next one: a long-lived
@@ -182,58 +182,23 @@ def _hygienic(
     worth of frames (functions/_cache.py registry) and retains at most
     one query's worth of task/stage/job/SQL-execution status entries
     (functions/_hygiene.py — the ~4-5 MB/query JVM residue that OOMed a
-    bare 1 GiB session mid-board at sf0.1 in round 9). Round 12 adds two
-    small-heap levers (the 217-query bare-1 GiB board died ~30 queries
-    from the end with GCLocker thrash): stale memory-sink tables from
-    PREVIOUS streaming queries are dropped (each pins its full result in
-    driver heap for the session's life otherwise), and sessions with a
-    small max heap get an explicit full GC so floating residue can't
-    compound into allocation-failure thrash mid-query (skipped on
+    bare 1 GiB session mid-board at sf0.1 in round 9). Sessions with a
+    small max heap also get an explicit full GC so floating residue
+    can't compound into allocation-failure thrash mid-query (skipped on
     big-heap sessions where the pause would cost more than it frees).
-    Round 13 narrows the stream-view sweep: _run_to_memory now drops
-    its own view eagerly, so the pass only clears SAME-OWNER crash
-    leftovers and can never destroy a concurrent foreign query's sink
-    (round-12 verdict #7)."""
+    Memory-sink views need no sweep here: streaming/windowed.py::
+    _run_to_memory drops its own view on every exit path."""
     from ..functions._cache import release_cached
     from ..functions._hygiene import trim_status_store
-    from ..streaming.windowed import set_stream_owner
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_cached()
         trim_status_store(spark)
-        set_stream_owner(query_name)
-        _drop_stale_stream_tables(spark, keep_owner=query_name)
         _gc_small_heap(spark)
         return fn(spark, sf_dir)
 
     run.__doc__ = fn.__doc__
     return run
-
-
-def _drop_stale_stream_tables(
-    spark: SparkSession, keep_owner: str | None = None
-) -> None:
-    """Sweep memory-sink temp views that escaped their replay's own
-    immediate drop (streaming/windowed.py::_run_to_memory drops its
-    view as soon as the result frame is captured; a crash between
-    ``start()`` and that drop can strand one). Views are tagged
-    ``stream_out_<owner>__...``: only views owned by ``keep_owner`` —
-    the query about to run again — are swept, so a CONCURRENT foreign
-    query's mid-replay view is never destroyed (round-12 verdict #7:
-    the old blanket drop made the public queries() surface
-    destructively single-flight). Per-query single-flight remains the
-    contract (__spark_entry__ docstring)."""
-    from ..streaming.windowed import stream_owner_tag
-
-    if not keep_owner:
-        return
-    own = f"stream_out_{stream_owner_tag(keep_owner)}__"
-    try:
-        for t in spark.catalog.listTables():
-            if t.name.startswith(own) and t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-    except Exception:
-        pass
 
 
 def _gc_small_heap(spark: SparkSession, max_heap_gib: float = 4.0) -> None:
@@ -520,5 +485,5 @@ assert sorted(_ORDER) == sorted(_ALL_QUERIES), (
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    name: _hygienic(_ALL_QUERIES[name], name) for name in _ORDER
+    name: _hygienic(_ALL_QUERIES[name]) for name in _ORDER
 }

@@ -10,8 +10,10 @@ opaque gzip TFRecord bytes and can do neither — see SURVEY.md §2.1 S1).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -29,9 +31,57 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: per session: table path -> (file signature, the schema Spark inferred)
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_signature(path: str) -> tuple:
+    """Size and ``st_mtime_ns`` of the file, or of every file under the
+    directory (with its relative name)."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((st.st_size, st.st_mtime_ns),)
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            fp = os.path.join(root, f)
+            st = os.stat(fp)
+            sig.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return tuple(sig)
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema Spark infers for one synthetic table. Inferring a
+    parquet schema costs one Spark job, so the session keeps it per path
+    while the file signature (size + mtime of every file) is unchanged;
+    a rewritten file is inferred again and replaces the entry."""
+    if name == "events":
+        try:
+            # no-op on Spark 4.1+, needed on older versions for the bigint
+            # path; runtime conf (not builder-only) because the caller may
+            # hand us a vanilla SparkSession
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        except Exception:
+            pass
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    # a missing or non-local path goes to the reader uncached
+    sig = _file_signature(path) if os.path.exists(path) else None
+    known = _SCHEMAS.setdefault(spark, {})
+    if sig is None or known.get(path, (None,))[0] != sig:
+        schema = spark.read.parquet(path).schema
+        if sig is None:
+            return schema
+        known[path] = (sig, schema)
+    return known[path][1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table. Plain parquet scan — Catalyst handles
-    pushdown/pruning; no schema inference cost (parquet is self-described).
+    """Read one synthetic table. Plain parquet scan with the session's
+    kept schema (``table_schema``) — Catalyst handles pushdown/pruning,
+    and Spark still lists the files on every call.
 
     ``events.ts`` is TIMESTAMP(NANOS) in the parquet file. How Spark
     surfaces that varies by version: <= 4.0 needs
@@ -42,15 +92,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UTC (session.py), so the NTZ->LTZ cast preserves the epoch value and
     ``unix_millis(ts)`` matches DuckDB's ``epoch_ms`` downstream.
     """
-    if name == "events":
-        try:
-            # no-op on Spark 4.1+, needed on older versions for the bigint
-            # path; runtime conf (not builder-only) because the caller may
-            # hand us a vanilla SparkSession (the grading driver does)
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = _normalize_event_ts(df)
     return df

@@ -36,8 +36,6 @@ screen in dedup_incoming.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,11 +50,10 @@ STREAM_PQ_THRESHOLD = 0.3
 def _emb_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table replayed through readStream (the _docs_stream
     pattern: glob-filtered dir read with the batch-established schema)."""
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "embeddings.parquet")
-    ).schema
+    from ..sources.tables import table_schema
+
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(table_schema(spark, sf_dir, "embeddings"))
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf_dir)
     )

@@ -27,8 +27,6 @@ stateless and shuffle-free).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,9 +34,10 @@ from pyspark.sql import functions as F
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table replayed through readStream (the _events_stream
     pattern: glob-filtered dir read with the batch-established schema)."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    from ..sources.tables import table_schema
+
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(table_schema(spark, sf_dir, "documents"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

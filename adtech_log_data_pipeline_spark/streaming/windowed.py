@@ -63,28 +63,6 @@ def stream_partitions(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
         spark.conf.set(key, old)
 
 
-#: the declared query currently executing (plans/queries.py::_hygienic
-#: sets it) — folded into each memory-sink view name so the inter-query
-#: hygiene can drop ONLY foreign queries' sink views instead of every
-#: stream_out_* view (round-12 verdict #7: the blanket drop was
-#: destructive under concurrent use of the public queries() surface)
-_STREAM_OWNER = ""
-
-
-def set_stream_owner(name: str) -> None:
-    """Tag subsequent _run_to_memory sink views as owned by ``name``."""
-    global _STREAM_OWNER
-    _STREAM_OWNER = name
-
-
-def stream_owner_tag(name: str) -> str:
-    """``name`` as the sanitized single-token view-name segment (no
-    double underscores, so the ``__`` separator stays unambiguous)."""
-    import re
-
-    return re.sub(r"_+", "_", re.sub(r"[^a-z0-9_]", "_", name.lower())) or "anon"
-
-
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Execute a streaming frame to completion against the available input
     and return the materialized result (deterministic: single replay).
@@ -98,8 +76,7 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
 
     global _QUERY_SEQ
     _QUERY_SEQ += 1
-    owner = stream_owner_tag(_STREAM_OWNER)
-    name = f"stream_out_{owner}__{os.getpid()}_{_QUERY_SEQ}"
+    name = f"stream_out_{os.getpid()}_{_QUERY_SEQ}"
     spark = stream_df.sparkSession
     # explicit scratch checkpoint (RAM-backed when /dev/shm exists): the
     # memory sink's implicit temp checkpoint lands under java.io.tmpdir on
@@ -122,38 +99,32 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
         out = spark.table(name)
         # the DataFrame resolves the sink relation EAGERLY (touching the
         # schema pins the analyzed plan), so the temp view's name is no
-        # longer needed: drop it NOW. The sink's rows stay reachable
-        # through the returned frame and become GC-able the moment the
-        # caller releases it — no stream_out_ view ever outlives its
-        # query, which is both the round-12 heap fix (views pinned every
-        # emitted row in driver heap for the session's life) and the
-        # round-12 verdict-#7 concurrency fix (a later query's hygiene
-        # pass can no longer destroy a foreign query's sink, because
-        # there is nothing left to drop)
+        # longer needed. The sink's rows stay reachable through the
+        # returned frame and become GC-able the moment the caller
+        # releases it.
         _ = out.schema
-        spark.catalog.dropTempView(name)
         return out
     finally:
+        # no stream_out_ view outlives its replay, also when the stream
+        # fails after start(): a left view would pin its rows in driver
+        # heap for the session's life, and nothing else reclaims it
+        # (every replay names a fresh view)
+        spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import _normalize_event_ts, load_table
+    from ..sources.tables import _normalize_event_ts, table_schema
 
-    batch = load_table(spark, sf_dir, "events")  # establishes schema + ts conv
     # readStream requires a directory: stream the sf dir with a glob filter
     stream = (
-        spark.readStream.schema(
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-        )
+        spark.readStream.schema(table_schema(spark, sf_dir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
     # same version-dependent ts normalization as the batch path: bigint
     # nanos on old Spark, timestamp_ntz on 4.1+ (withWatermark rejects NTZ)
-    stream = _normalize_event_ts(stream)
-    _ = batch  # schema side effects only
-    return stream
+    return _normalize_event_ts(stream)
 
 
 def stream_window_counts(

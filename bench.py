@@ -28,9 +28,9 @@ dominated and useless as a regression gate):
   before: the min of two cold-cache runs is attributable to the plan.
 * REGRESSIONS CONFIRMED BEFORE PUBLICATION (round-11; the round-10
   artifact's top-regressions list was 100% host contention): every
-  candidate over the 1.5x/+0.5 s floor is re-run once in a fresh child
-  JVM and the min kept — a plan regression reproduces, a noisy-neighbor
-  spike does not. Only survivors are published; the trailer's
+  candidate over tools/bench_diff.py's 1.25x/+0.5 s floor is re-run
+  once in a fresh child JVM and the min kept — a plan regression
+  reproduces, a noisy-neighbor spike does not. Only survivors are published; the trailer's
   ``rerun_confirmed`` lists what was re-checked.
 """
 
@@ -43,6 +43,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools.bench_diff import REGRESSION_MIN_S, REGRESSION_RATIO
 
 CHUNK_SIZE = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "38"))
 
@@ -529,7 +531,7 @@ def main() -> None:
     delta: dict[str, object] = {"prev": prev_name, "n_common": len(common)}
     if common:
         def _regressions() -> dict[str, float]:
-            # same thresholds as tools/bench_diff.py: a ratio alone flags
+            # the thresholds of tools/bench_diff.py: a ratio alone flags
             # sub-second noise on tiny queries — require a real absolute
             # delta too
             rs = sorted(
@@ -540,7 +542,7 @@ def main() -> None:
             return {
                 q: r
                 for r, q in rs[-5:][::-1]
-                if r >= 1.5 and timings[q] - prev[q] >= 0.5
+                if r >= REGRESSION_RATIO and timings[q] - prev[q] >= REGRESSION_MIN_S
             }
 
         candidates = _regressions()

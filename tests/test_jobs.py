@@ -121,9 +121,13 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
     After the first run Janino compiles no whole-stage-codegen class:
     the session's class cache holds the jobs' ~130 classes and their
     names carry no stage id. At Spark's default 100 entries each run
-    evicted what the next one needed and recompiled ~125."""
+    evicted what the next one needed and recompiled ~125. Nor do the
+    load_table schema cache and the validity-predicate memo grow after
+    the first run: the same entries and the same Column serve runs 2
+    and 3."""
     from adtech_log_data_pipeline_spark.functions import _cache
-    from adtech_log_data_pipeline_spark.operators import skew
+    from adtech_log_data_pipeline_spark.operators import skew, validate
+    from adtech_log_data_pipeline_spark.sources import tables
     from adtech_log_data_pipeline_spark.sources.bidlogs import load_bid_logs, load_iapp
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
@@ -144,6 +148,9 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
     def rdd_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
+    def memos():
+        return tables._SCHEMAS[spark].copy(), validate._VALID[1]
+
     before, before_rdds = footprint(), rdd_ids()
     for run in range(3):
         compiled = compiles.getCount()
@@ -158,8 +165,13 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
         )
         assert footprint() == before, run
         assert rdd_ids() <= before_rdds, run
-        if run > 0:
+        if run == 0:
+            first_memos = memos()
+        else:
             assert compiles.getCount() == compiled, run
+            schemas, predicate = memos()
+            assert schemas == first_memos[0], run
+            assert predicate is first_memos[1], run
 
 
 def test_b64_codec_roundtrip_drops_malformed(spark, tmp_path):

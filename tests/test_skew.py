@@ -1,6 +1,7 @@
 """Salted distinct-count must equal the plain countDistinct on skewed and
 uniform inputs alike."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from adtech_log_data_pipeline_spark.operators.skew import salted_count_distinct
@@ -536,9 +537,9 @@ def test_hygienic_drops_stale_stream_tables(spark):
 def test_interleaved_streaming_queries_keep_results(spark):
     """Two declared streaming queries interleaved in one session must
     not destroy each other's results (round-12 verdict #7): build A,
-    build B (whose hygiene pass runs between), then consume BOTH. The
-    owner-scoped sweep plus the eager view drop make the second build
-    unable to touch the first's sink relation."""
+    build B (whose hygiene pass runs between), then consume BOTH. Each
+    replay drops its own sink view before it returns, so the second
+    build has nothing of the first's to touch."""
     from adtech_log_data_pipeline_spark.plans.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
@@ -546,15 +547,28 @@ def test_interleaved_streaming_queries_keep_results(spark):
     b = QUERIES["stream_sliding_counts"](spark, sf)
     assert a.count() > 0
     assert b.count() > 0
-    # and a stranded foreign view (simulated crash leftover) survives
-    # another query's hygiene pass: the sweep is owner-scoped
-    a.limit(1).createOrReplaceTempView("stream_out_stream_window_counts__999_1")
-    QUERIES["pricing_summary"](spark, sf).count()
+
+
+def test_failed_replay_leaves_no_stream_view(spark, tmp_path):
+    """A replay whose stream fails after start() drops its memory-sink
+    view too: the drop is on every exit path of _run_to_memory, so no
+    sweep between queries is needed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from adtech_log_data_pipeline_spark.streaming.windowed import (
+        _events_stream,
+        _run_to_memory,
+    )
+
+    pq.write_table(
+        pa.table({"user_id": [1, 2], "ts": pa.array([0, 1_000_000], pa.timestamp("us"))}),
+        tmp_path / "events.parquet",
+    )
+    stream = _events_stream(spark, str(tmp_path)).withColumn(
+        "boom", F.raise_error(F.lit("replay fails after start"))
+    )
+    with pytest.raises(Exception, match="replay fails after start"):
+        _run_to_memory(stream, "append")
     names = [t.name for t in spark.catalog.listTables() if t.isTemporary]
-    assert "stream_out_stream_window_counts__999_1" in names
-    # ... until its OWN query runs again and reclaims it
-    QUERIES["stream_window_counts"](spark, sf).count()
-    names = [t.name for t in spark.catalog.listTables() if t.isTemporary]
-    assert "stream_out_stream_window_counts__999_1" not in names, names
-    spark.catalog.dropTempView("stream_out_stream_window_counts__999_1") \
-        if "stream_out_stream_window_counts__999_1" in names else None
+    assert not any(n.startswith("stream_out_") for n in names), names

@@ -18,6 +18,11 @@ import re
 import sys
 
 VARIANCE_BAND = 1.10  # documented same-box, cross-session noise
+# a query regressed when it got this much slower AND by at least this
+# many seconds (a ratio alone flags sub-second noise on tiny queries);
+# bench.py flags its regressions with the same pair
+REGRESSION_RATIO = 1.25
+REGRESSION_MIN_S = 0.5
 
 
 def load_queries(path: str) -> dict[str, float]:
@@ -50,7 +55,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
     ap.add_argument("new")
-    ap.add_argument("--threshold", type=float, default=1.25)
+    ap.add_argument("--threshold", type=float, default=REGRESSION_RATIO)
     args = ap.parse_args()
 
     old, new = load_queries(args.old), load_queries(args.new)
@@ -60,8 +65,12 @@ def main() -> int:
         return 1
     rows = [(q, old[q], new[q], new[q] / old[q] if old[q] else float("inf"))
             for q in shared]
-    regressions = [r for r in rows if r[3] >= args.threshold and r[2] >= 0.5]
-    improvements = [r for r in rows if r[3] <= 1 / args.threshold and r[1] >= 0.5]
+    regressions = [
+        r for r in rows if r[3] >= args.threshold and r[2] >= REGRESSION_MIN_S
+    ]
+    improvements = [
+        r for r in rows if r[3] <= 1 / args.threshold and r[1] >= REGRESSION_MIN_S
+    ]
 
     def show(title, rs, reverse):
         print(f"\n{title} ({len(rs)}):")
@@ -69,8 +78,12 @@ def main() -> int:
             band = "" if ratio <= VARIANCE_BAND and ratio >= 1 / VARIANCE_BAND else ""
             print(f"  {q}: {a:.2f} -> {b:.2f}  ({ratio:.2f}x){band}")
 
-    show(f">= {args.threshold}x slower (and >= 0.5s)", regressions, True)
-    show(f"<= {1/args.threshold:.2f}x (improved, was >= 0.5s)", improvements, False)
+    show(f">= {args.threshold}x slower (and >= {REGRESSION_MIN_S}s)", regressions, True)
+    show(
+        f"<= {1/args.threshold:.2f}x (improved, was >= {REGRESSION_MIN_S}s)",
+        improvements,
+        False,
+    )
     o_sum = sum(old[q] for q in shared)
     n_sum = sum(new[q] for q in shared)
     print(

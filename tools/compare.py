@@ -8,7 +8,10 @@ oracle get a rows-only check. Usage:
 
     python tools/compare.py [--vanilla] [--exec-hash] [sf_dir] [query ...]
 
-Every verdict line carries the matched value hash (``hash=<md5>``; the
+A query whose result has 0 rows on both sides prints ``PASS-EMPTY``
+instead of ``PASS``: the match is vacuous, and the summary counts these
+lines (the exit status counts failures only). Every verdict line
+carries the matched value hash (``hash=<md5>``; the
 oracle's hash is identical by construction when the line says PASS), so
 a log scraped into LOCALGATE is self-certifying. ``--exec-hash``
 switches to an executor-side commutative multiset hash — the Spark
@@ -220,6 +223,7 @@ def main() -> int:
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    empty = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -260,7 +264,9 @@ def main() -> int:
                 print(f"FAIL {name}: {'; '.join(problems)} [{t_spark:.1f}s]")
                 failures.append(name)
             else:
-                print(f"PASS {name}: {n_s} rows [{t_spark:.1f}s] hash={htxt}")
+                verdict = "PASS-EMPTY" if n_s == 0 else "PASS"
+                empty += n_s == 0
+                print(f"{verdict} {name}: {n_s} rows [{t_spark:.1f}s] hash={htxt}")
             continue
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -300,9 +306,14 @@ def main() -> int:
             print(f"FAIL {name}: {'; '.join(problems)} [{t_spark:.1f}s]")
             failures.append(name)
         else:
-            print(f"PASS {name}: {len(sdf)} rows [{t_spark:.1f}s] hash={hs}")
+            verdict = "PASS-EMPTY" if len(sdf) == 0 else "PASS"
+            empty += len(sdf) == 0
+            print(f"{verdict} {name}: {len(sdf)} rows [{t_spark:.1f}s] hash={hs}")
 
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    # an empty result on both sides passes vacuously: it checks the
+    # columns and nothing else, so it is counted apart
+    print(f"\n{empty} vacuous passes (PASS-EMPTY: 0 rows on both sides)")
+    print(f"{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
 

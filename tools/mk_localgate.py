@@ -1,8 +1,9 @@
 """Assemble LOCALGATE_r{N}.json from tools/compare.py run logs.
 
 Each section maps query -> {rows, sec, ok, check, hash} scraped from the
-verdict lines ("PASS name: N rows [X.Xs] hash=..." / "ok?  name:
-rows-only check, N rows [X.Xs] hash=..."); a FAIL anywhere aborts (the
+verdict lines ("PASS name: N rows [X.Xs] hash=...", "PASS-EMPTY name:
+0 rows ..." for a vacuous match, "ok?  name: rows-only check, N rows
+[X.Xs] hash=..."); a FAIL anywhere aborts (the
 artifact only records green boards). The embedded per-row verdict + the
 matched value hash make the artifact SELF-CERTIFYING (round-10 verdict:
 {rows, sec} alone proved nothing without re-deriving trust from
@@ -29,15 +30,15 @@ def parse_log(path: str) -> dict[str, dict[str, object]]:
     if fails:
         raise SystemExit(f"{path}: FAIL rows present: {fails}")
     for m in re.finditer(
-        r"PASS ([a-z0-9_]+): (\d+) rows \[([0-9.]+)s\](?: hash=([a-z0-9:]+))?",
+        r"PASS(-EMPTY)? ([a-z0-9_]+): (\d+) rows \[([0-9.]+)s\](?: hash=([a-z0-9:]+))?",
         text,
     ):
-        out[m.group(1)] = {
-            "rows": int(m.group(2)),
-            "sec": float(m.group(3)),
+        out[m.group(2)] = {
+            "rows": int(m.group(3)),
+            "sec": float(m.group(4)),
             "ok": True,
-            "check": "oracle_hash",
-            "hash": m.group(4),
+            "check": "oracle_empty" if m.group(1) else "oracle_hash",
+            "hash": m.group(5),
         }
     for m in re.finditer(
         r"ok\?\s+([a-z0-9_]+): rows-only check, (\d+) rows"
@@ -73,6 +74,9 @@ def main() -> None:
             "n_fail": sum(1 for r in rows.values() if not r["ok"]),
             "n_oracle_hash": sum(
                 1 for r in rows.values() if r["check"] == "oracle_hash"
+            ),
+            "n_oracle_empty": sum(
+                1 for r in rows.values() if r["check"] == "oracle_empty"
             ),
             "n_rows_only": sum(
                 1 for r in rows.values() if r["check"] == "rows_only"

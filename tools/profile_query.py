@@ -4,9 +4,12 @@ For each named query: capture .explain("formatted") to a file, then time
 N noop-sink executions (cache cleared between runs, same methodology as
 bench.py::run_chunk) and report per-run seconds, the Spark job count
 the execution spawned (scheduler-side cost signal local mode hides in
-wall time), and per run the whole-stage-codegen classes Janino compiled
-and the time that took (the codegen layer: a warm run that hits Spark's
-class cache compiles 0). Jobs are labeled via setJobDescription.
+wall time), per run the time spent building the plan
+(``QUERIES[name](...)``) and the jobs started before the action (0 when
+building runs no Spark job), and per run the whole-stage-codegen
+classes Janino compiled and the time that took (the codegen layer: a
+warm run that hits Spark's class cache compiles 0). Jobs are labeled via
+setJobDescription.
 
 Usage:
     python tools/profile_query.py [--plans-dir plans/r13] [--suffix before]
@@ -14,6 +17,7 @@ Usage:
 
 Prints one JSON line per query:
     {"query": name, "runs": [sec, ...], "best": sec, "n_jobs_last_run": J,
+     "build_s": [sec, ...], "n_jobs_build": [n, ...],
      "codegen_compiles": [n, ...], "codegen_compile_ms": [ms, ...],
      "plan_file": path}
 """
@@ -59,12 +63,17 @@ def main() -> None:
 
     os.makedirs(args.plans_dir, exist_ok=True)
 
+    def _drain() -> None:
+        # the listener writes the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
     def _n_jobs() -> int:
         # AppStatusStore job count — survives job-group-less submission
         # (statusTracker.getJobIdsForGroup only sees grouped jobs). The
         # inter-query hygiene trims this store, so only the within-query
         # delta is meaningful, and the baseline is read after a trim.
         try:
+            _drain()
             return sc._jsc.sc().statusStore().jobsList(None).size()
         except Exception:
             return -1
@@ -98,21 +107,25 @@ def main() -> None:
             release_cached()
             spark.catalog.clearCache()
         if not args.no_time:
-            runs, compiles, compile_ms = [], [], []
+            runs, builds, build_jobs, compiles, compile_ms = [], [], [], [], []
             jobs0 = jobs1 = 0
             for i in range(args.runs):
                 sc.setJobDescription(f"profile:{name}:run{i}")
                 # the trim the query's hygiene wrapper makes first, made
                 # here before the baseline count: the wrapper's own trim
                 # then finds nothing completed that jobs0 counted
+                _drain()
                 trim_status_store(spark)
                 jobs0 = _n_jobs()
                 n0, ns0 = _codegen()
                 t0 = time.time()
-                QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.time() - t0, 3))
+                df = QUERIES[name](spark, args.sf_dir)
+                t_build = time.time() - t0
+                build_jobs.append(_n_jobs() - jobs0)
+                t1 = time.time()
+                df.write.format("noop").mode("overwrite").save()
+                builds.append(round(t_build, 3))
+                runs.append(round(t_build + time.time() - t1, 3))
                 n1, ns1 = _codegen()
                 compiles.append(n1 - n0)
                 compile_ms.append(round((ns1 - ns0) / 1e6, 1))
@@ -123,6 +136,8 @@ def main() -> None:
             out["runs"] = runs
             out["best"] = min(runs)
             out["n_jobs_last_run"] = jobs1 - jobs0
+            out["build_s"] = builds
+            out["n_jobs_build"] = build_jobs
             out["codegen_compiles"] = compiles
             out["codegen_compile_ms"] = compile_ms
         print(json.dumps(out), flush=True)
