@@ -344,45 +344,6 @@ def decode_image_metadata(blobs: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(blobs: DataFrame, max_dim: int = RESIZE_MAX_DIM) -> DataFrame:
-    """REAL resize stage for PNG blobs: decode, nearest-neighbor resample
-    to fit ``max_dim`` (sources/media.py::resize_png — integer-exact
-    geometry, deterministic), re-encode. Non-PNG payloads pass through
-    unchanged with resized=false (sniff-then-dispatch, like
-    decode_media). Output: (doc_id, blob, width, height, resized).
-    Map-only; blobs never shuffle — at 100 TB this stage is bounded by
-    decode CPU and scales with partition count."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources.media import decode_png, is_png, resize_png
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = {"doc_id": [], "blob": [], "width": [], "height": [], "resized": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(blob)
-                if is_png(b):
-                    rb = resize_png(b, max_dim)
-                    meta = decode_png(rb)
-                    out["blob"].append(rb)
-                    out["width"].append(meta["width"])
-                    out["height"].append(meta["height"])
-                    out["resized"].append(rb != b)
-                else:
-                    out["blob"].append(b)
-                    out["width"].append(-1)
-                    out["height"].append(-1)
-                    out["resized"].append(False)
-                out["doc_id"].append(doc_id)
-            yield pd.DataFrame(out)
-
-    return blobs.mapInPandas(
-        run,
-        schema="doc_id long, blob binary, width int, height int, resized boolean",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Image-text pair alignment (round-12 verdict "Next round" #4): the
 # CLIP-filtering shape that completes multimodal curation — score each

@@ -8,8 +8,8 @@ Scale shape: ONE aggregation pass over the table produces every metric
 (Spark expands multi-countDistinct via a single Expand + hash agg — the
 rows scan once); the per-column unpivot is a row-generator over the 1-row
 aggregate. At 100 TB swap the exact countDistinct for
-approx_count_distinct (operators/approx.py shows the pattern) — exact
-distinct counts are the one metric whose state grows with cardinality.
+approx_count_distinct (``approx_distinct=True``) — exact distinct counts
+are the one metric whose state grows with cardinality.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def table_profile(
     ``approx_distinct=True`` swaps the exact countDistinct (whose agg
     state grows with cardinality) for HyperLogL++ — the 100 TB posture;
     approx results are engine-specific, so the oracle-gated query keeps
-    the exact default (same tradeoff as operators/approx.py)."""
+    the exact default."""
     fields = {f.name: f.dataType for f in df.schema.fields}
     cols = columns if columns is not None else list(fields)
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n_rows")]

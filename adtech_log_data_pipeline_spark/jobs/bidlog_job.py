@@ -5,8 +5,9 @@ AppProfiles (+ duplicate tripwire) -> SuspiciousIDs -> three sinks.
 The Beam graph's three shuffle boundaries (Combine.perKey, Count.perElement,
 Combine.perKey) become Spark hash aggregations with automatic partial
 aggregation; the popular-apps side input becomes a broadcast join inside
-suspicious_ids. Outputs are written partitioned (parquet) plus optional
-Base64-text for format fidelity.
+suspicious_ids. Outputs are written partitioned (parquet); the suspicious
+IDs can also be written as the reference's Base64 DeviceId protobuf lines
+(IOUtils.encodeB64AndWrite, jobs1/BidLogJob.java:149-151).
 
 Persist once, release on exit: Beam materialises the DeviceProfile
 PCollection once and fans it out to every consumer; a lazy Spark plan
@@ -31,7 +32,12 @@ from ..operators.app_profile import app_profiles
 from ..operators.device_profile import device_profiles
 from ..operators.suspicious import SuspiciousThresholds, suspicious_ids
 from ..operators.validate import is_valid_bidlog, valid_bid_logs
-from ..sources.codecs import write_b64_text
+from ..sources.protowire import DEVICE_ID, NAME_TO_OS, encode_b64_proto
+
+
+def _device_id(row: dict) -> dict:
+    """(os, uuid) row -> DeviceId message (os as its enum number)."""
+    return {"os": NAME_TO_OS[row["os"]], "uuid": row["uuid"]}
 
 
 @dataclass
@@ -52,8 +58,8 @@ def run_bidlog_job(
     b64_outputs: bool = False,
 ) -> BidLogJobResult:
     """Execute pipeline 1. When `output_dir` is set, writes parquet outputs
-    (device_profiles/ app_profiles/ suspicious/); `b64_outputs` adds the
-    reference's Base64-text format next to them.
+    (device_profiles/ app_profiles/ suspicious/); `b64_outputs` adds
+    suspicious_b64/, one Base64 DeviceId protobuf line per suspicious ID.
 
     Observability: the validity filter's admit/drop counts ride the
     action that fills the device-profiles cache (the duplicate tripwire)
@@ -85,7 +91,9 @@ def run_bidlog_job(
             aps.write.mode("overwrite").parquet(out("app_profiles"))
             susp.write.mode("overwrite").parquet(out("suspicious"))
             if b64_outputs:
-                write_b64_text(susp, out("suspicious_b64"))
+                encode_b64_proto(susp, DEVICE_ID, _device_id).write.mode(
+                    "overwrite"
+                ).text(out("suspicious_b64"))
     finally:
         release_cached_from(mark)
 

@@ -19,7 +19,6 @@ the next call for the same input replaces them.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 
@@ -27,7 +26,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from ..streaming._replay import scratch_dir
+from ..streaming._replay import scratch_dir, scratch_slot
 
 # Fixed partition counts for the gated layout jobs: the INVARIANTS below
 # hold for any count; pinning one keeps run time flat across SFs.
@@ -360,17 +359,6 @@ def q_tfexample_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
-# sf_dir -> the scratch shards backing the last q_tfrecord_parity_check
-# frame returned for it; each call replaces its predecessor's shards
-_PARITY_SCRATCH: dict[str, str] = {}
-
-
-@atexit.register
-def _drop_parity_scratch() -> None:
-    for work in _PARITY_SCRATCH.values():
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Input-fidelity gate for the reference's ACTUAL ingestion path
     (BidLogJob.java:135: TFRecordIO.read + ProtoCoder): materialize the
@@ -411,11 +399,7 @@ def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.tfrecord import read_tfrecord_proto, write_tfrecord_partitioned
 
-    key = os.path.abspath(sf_dir)
-    prev = _PARITY_SCRATCH.pop(key, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = scratch_dir("tfrecord_parity_")
+    work = scratch_slot("tfrecord_parity_", os.path.abspath(sf_dir))
     shards = os.path.join(work, "bidlogs")
     try:
         logs = load_bid_logs(spark, sf_dir)
@@ -435,7 +419,6 @@ def q_tfrecord_parity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 10-24 s at sf1; the sf1 8c/32c ratio read 1.03 because the
         # driver leg serialized everything). The scratch shards instead
         # live until the next call for this sf_dir replaces them.
-        _PARITY_SCRATCH[key] = work
         return flatten_device_profiles(device_profiles(valid_bid_logs(decoded)))
     except BaseException:
         shutil.rmtree(work, ignore_errors=True)

@@ -1325,8 +1325,7 @@ def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_device_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-device incremental profile aggregates — exact
     first/last/count/distinct-type counts maintained by the state store
-    (oracle-checked; the approximate HLL variant is tolerance-tested in
-    operators/approx.py)."""
+    (oracle-checked)."""
     from ..streaming import streaming_device_activity
 
     return streaming_device_activity(spark, sf_dir)

@@ -1,129 +1,20 @@
-"""Boundary codecs — the reference's at-rest formats re-expressed
-(SURVEY.md §2.1 S2-S5).
+"""JSON text sink — the reference's compact-JSON prediction output
+(SURVEY.md §2.1 S5).
 
-The reference persists newline-delimited Base64-encoded protobuf messages
-(utils/IOUtils.java:15-19, utils/ProtoUtils.java:22-59) and reads them back
-with a malformed-row-dropping decode. Protobuf itself is an artifact of the
-reference's grading harness; the engine's canonical at-rest format is
-Parquet. For fidelity we provide the same framing with a JSON payload:
-
-  encode: struct -> to_json -> base64 -> one line per record (text sink)
-  decode: text -> unbase64 -> from_json(schema) -> drop malformed rows
-
-(`from_protobuf`/`to_protobuf` from pyspark.sql.protobuf slot in here
-directly when a compiled descriptor set is available — same pipeline shape,
-different serializer.)
-
-All encode/decode work is JVM-side built-ins: base64/unbase64/to_json/
-from_json — no Python in the path.
+The reference's other text format, newline-delimited Base64 protobuf
+lines (utils/IOUtils.java:15-19), is written and read by
+`protowire.encode_b64_proto` / `decode_b64_proto`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
-def encode_b64_json(df: DataFrame) -> DataFrame:
-    """All columns -> one Base64(JSON) text column named `value`
-    (the shape TextIO expects — reference IOUtils.encodeB64AndWrite).
-
-    Spark's base64() MIME-chunks at 76 chars with CRLF (found by the
-    codec roundtrip fuzz law: any payload past ~57 JSON bytes split
-    across text-sink lines and was dropped on read as two malformed
-    rows). Strip the intra-value line breaks so one record is one line —
-    decoders ignore the removed whitespace, so the encoding is still
-    standard base64."""
-    return df.select(
-        F.regexp_replace(
-            F.base64(F.to_json(F.struct(*df.columns)).cast("binary")),
-            "[\\r\\n]",
-            "",
-        ).alias("value")
-    )
-
-
-def write_b64_text(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Base64 text sink (S4). `single_file` mirrors the reference's local
-    withNumShards(1); NEVER use it at scale — the default keeps the sink
-    partitioned."""
-    out = encode_b64_json(df)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
-
-
-def read_b64_json(
-    spark: SparkSession, path: str, schema: StructType | str
-) -> DataFrame:
-    """Text source + decode (S2+S3). Malformed lines (bad base64 / bad
-    JSON / wrong shape) are dropped, mirroring the reference's try/catch
-    decode (ProtoUtils.decodeMessageBase64, Features.java:72-79)."""
-    raw = spark.read.text(path)
-    # unbase64 is strict in Spark 4, and a regex pre-filter is NOT a safe
-    # gate (Catalyst may reorder deterministic filters around a projection).
-    # try_to_binary is null-on-malformed regardless of plan shape.
-    parsed = raw.select(
-        F.from_json(
-            F.expr("try_to_binary(value, 'base64')").cast("string"), schema
-        ).alias("r")
-    )
-    # from_json is PERMISSIVE: unparseable payloads come back as all-null
-    # structs. Dropping those is exactly the reference's default-instance
-    # filter (F7, Features.java:75-77) plus its decode try/catch.
-    return parsed.filter(
-        F.col("r").isNotNull() & (F.to_json(F.col("r")) != F.lit("{}"))
-    ).select("r.*")
-
-
-def write_json_text(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_json_text(df: DataFrame, path: str) -> None:
     """Compact-JSON text sink (S5) preserving snake_case field names
-    (reference ProtoUtils printer :50-59 keeps proto field names)."""
+    (reference ProtoUtils printer :50-59 keeps proto field names). JVM
+    built-ins only; the sink stays partitioned."""
     out = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    if single_file:
-        out = out.coalesce(1)
     out.write.mode("overwrite").text(path)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    mode: str = "DROPMALFORMED",
-) -> DataFrame:
-    """Newline-delimited JSON source — the read side of write_json_text,
-    via Spark's native JSON reader (partitioned splittable text scan, JVM
-    parser, schema projection pushed into the parse).
-
-    ``mode`` maps the reference's malformed-row semantics onto Spark's
-    parse modes: DROPMALFORMED (default; rows that fail to parse vanish,
-    ≡ the try/catch-drop decode in ProtoUtils/Features.java:72-79),
-    PERMISSIVE (malformed rows survive as nulls with the raw line captured
-    in ``_corrupt_record`` — the quarantine-and-audit shape), or FAILFAST
-    (corruption is an error, ≡ the X1 tripwire posture). An explicit
-    schema is REQUIRED: schema inference is a second full scan of the
-    input — never acceptable at 100 TB.
-
-    PERMISSIVE caveat (Spark restriction, not this reader's): a query
-    that references ONLY ``_corrupt_record`` from the raw scan raises
-    UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — ``.cache()``
-    the returned frame (Spark's documented workaround) before
-    quarantine-only audits like
-    ``df.filter("_corrupt_record IS NOT NULL").select("_corrupt_record")``."""
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(schema)
-    if mode.upper() == "PERMISSIVE" and "_corrupt_record" not in schema.names:
-        from pyspark.sql.types import StringType, StructField
-
-        schema = StructType(
-            list(schema.fields) + [StructField("_corrupt_record", StringType())]
-        )
-    return (
-        spark.read.schema(schema)
-        .option("mode", mode)
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )

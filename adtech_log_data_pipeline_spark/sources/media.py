@@ -4,8 +4,9 @@ with zlib + struct, which upgrades the multimodal decode seam from a
 stub to a working path for the two most common fixture formats.
 
 PNG support: 8-bit greyscale/RGB/RGBA, non-interlaced, all five scanline
-filters on decode (the encoder always writes filter 0). WAV support:
-PCM16 via the stdlib `wave` module. Anything else still routes to the
+filters. WAV support: PCM16 via the stdlib `wave` module. BMP support:
+24-bit uncompressed. Decode only; the encoders that build test fixtures
+live with the tests. Anything else still routes to the
 deterministic fake (functions/multimodal.py) — the seam's contract is
 sniff-then-dispatch, never a hard failure on unknown bytes.
 """
@@ -27,30 +28,6 @@ def is_png(payload: bytes) -> bool:
 
 def is_wav(payload: bytes) -> bool:
     return payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-
-
-def encode_png(width: int, height: int, pixels: bytes, color_type: int = 2) -> bytes:
-    """Minimal PNG encoder: 8-bit, non-interlaced, filter 0 scanlines,
-    one IDAT. ``pixels`` is row-major packed samples."""
-    ch = _CHANNELS[color_type]
-    if len(pixels) != width * height * ch:
-        raise ValueError("pixel buffer does not match dimensions")
-    stride = width * ch
-    raw = b"".join(
-        b"\x00" + pixels[y * stride : (y + 1) * stride] for y in range(height)
-    )
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(tag + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + tag + body + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
 
 
 def _unfilter(raw: bytes, width: int, height: int, ch: int) -> bytearray:
@@ -131,19 +108,6 @@ def decode_png(payload: bytes) -> dict:
     }
 
 
-def encode_wav(
-    samples: list[int], sample_rate: int = 16_000, channels: int = 1
-) -> bytes:
-    """PCM16 WAV bytes from int16 samples."""
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    return buf.getvalue()
-
-
 def decode_wav(payload: bytes) -> dict:
     """Parse a WAV: {channels, sample_rate, n_frames, duration_ms,
     mean_abs (integer mean absolute PCM16 amplitude, exact)}."""
@@ -167,64 +131,11 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
-def resize_png(payload: bytes, max_dim: int) -> bytes:
-    """Real nearest-neighbor resample of a PNG to fit within
-    ``max_dim`` (aspect preserved, integer-exact geometry — the same
-    floor((d * MAX) / m) contract as functions/multimodal.py::
-    resize_plan). Deterministic: source index = (i * src) // dst."""
-    meta = decode_png(payload)
-    w, h, ch = meta["width"], meta["height"], meta["channels"]
-    m = max(w, h)
-    if m <= max_dim:
-        return payload
-    tw = max(1, (w * max_dim) // m)
-    th = max(1, (h * max_dim) // m)
-    src = meta["pixels"]
-    out = bytearray(tw * th * ch)
-    for ty in range(th):
-        sy = (ty * h) // th
-        row = sy * w * ch
-        orow = ty * tw * ch
-        for tx in range(tw):
-            sx = (tx * w) // tw
-            out[orow + tx * ch : orow + (tx + 1) * ch] = src[
-                row + sx * ch : row + (sx + 1) * ch
-            ]
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-    return encode_png(tw, th, bytes(out), color_type=color_type)
-
-
 BMP_SIG = b"BM"
 
 
 def is_bmp(payload: bytes) -> bool:
     return payload[:2] == BMP_SIG
-
-
-def encode_bmp(width: int, height: int, pixels: bytes) -> bytes:
-    """Minimal BMP encoder: 24-bit BI_RGB, BITMAPINFOHEADER, bottom-up
-    rows, 4-byte row padding. ``pixels`` is row-major TOP-DOWN packed
-    RGB (the decode_png convention); rows are flipped and channel order
-    swapped to BGR on write."""
-    if len(pixels) != width * height * 3:
-        raise ValueError("pixel buffer does not match dimensions")
-    stride = width * 3
-    pad = (-stride) % 4
-    rows = []
-    for y in range(height - 1, -1, -1):
-        row = pixels[y * stride : (y + 1) * stride]
-        bgr = bytearray(stride)
-        bgr[0::3] = row[2::3]
-        bgr[1::3] = row[1::3]
-        bgr[2::3] = row[0::3]
-        rows.append(bytes(bgr) + b"\x00" * pad)
-    body = b"".join(rows)
-    off = 14 + 40
-    header = struct.pack("<2sIHHI", BMP_SIG, off + len(body), 0, 0, off)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(body), 2835, 2835, 0, 0
-    )
-    return header + info + body
 
 
 def decode_bmp(payload: bytes) -> dict:

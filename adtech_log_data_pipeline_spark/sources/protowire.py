@@ -3,12 +3,14 @@
 The reference persists newline-delimited Base64-encoded protobuf messages
 and decodes them with a malformed-row-dropping try/catch
 (utils/ProtoUtils.java:22-59, decode use at transforms/Features.java:62-79).
-`codecs.py` ships the same framing with a JSON payload; this module speaks
-the real protobuf *wire format* for the reference's message schemas
-(proto field numbers below match the .proto sources exactly), so data
-written by the reference's Java pipeline is readable by this engine and
-vice versa — without requiring protoc, the google.protobuf package, or the
-spark-protobuf jar, none of which this environment provides.
+This module speaks the real protobuf *wire format* for the reference's
+message schemas (proto field numbers below match the .proto sources
+exactly), so data written by the reference's Java pipeline is readable by
+this engine and vice versa — without requiring protoc, the
+google.protobuf package, or the spark-protobuf jar, none of which this
+environment provides. It is the engine's one Base64 text codec: BidLogJob's
+``b64_outputs`` sink writes ``encode_b64_proto`` lines, and
+``decode_b64_proto`` reads them back with the malformed-row drop.
 
 One path: a pure-Python wire codec run through Arrow-batched
 `mapInPandas` (the bid-log shape takes the vectorized lockstep codec in
@@ -440,59 +442,6 @@ def is_default_instance(msg: dict[str, Any], spec: Spec) -> bool:
     return not encode_message(msg, spec)
 
 
-# ---------------------------------------------------------------------------
-# engine-schema mapping for DeviceProfile (proto dict <-> flat columns)
-
-DEVICE_PROFILE_SQL_SCHEMA = (
-    "os string, uuid string, first_at long, last_at long,"
-    " apps array<struct<bundle:string, first_at:long, last_at:long,"
-    " count_per_exchange:map<int,int>>>,"
-    " geos array<struct<country:string, region:string>>"
-)
-
-
-def device_profile_to_row(msg: dict[str, Any]) -> dict[str, Any]:
-    did = msg["device_id"] or DEVICE_ID.default()
-    return {
-        "os": OS_TO_NAME.get(did["os"], "UNKNOWN_OS_TYPE"),
-        "uuid": did["uuid"],
-        "first_at": msg["first_at"],
-        "last_at": msg["last_at"],
-        "apps": [
-            {"bundle": a["bundle"], "first_at": a["first_at"],
-             "last_at": a["last_at"],
-             "count_per_exchange": a["count_per_exchange"]}
-            for a in msg["app"]
-        ],
-        "geos": [{"country": g["country"], "region": g["region"]}
-                 for g in msg["geo"]],
-    }
-
-
-def _aslist(v: Any) -> list:
-    # Arrow batches hand list columns to pandas as numpy arrays, whose
-    # truthiness is ambiguous — test for None explicitly.
-    return [] if v is None else list(v)
-
-
-def row_to_device_profile(row: dict[str, Any]) -> dict[str, Any]:
-    return {
-        "device_id": {"os": NAME_TO_OS.get(row["os"], 0), "uuid": row["uuid"]},
-        "first_at": row["first_at"],
-        "last_at": row["last_at"],
-        "app": [
-            {"bundle": a["bundle"], "first_at": a["first_at"],
-             "last_at": a["last_at"],
-             "count_per_exchange": dict(_aslist(a["count_per_exchange"]))
-             if not isinstance(a["count_per_exchange"], dict)
-             else dict(a["count_per_exchange"])}
-            for a in _aslist(row["apps"])
-        ],
-        "geo": [{"country": g["country"], "region": g["region"]}
-                for g in _aslist(row["geos"])],
-    }
-
-
 BID_LOG_SQL_SCHEMA = (
     "bid_id string, exchange int, bid_result int, bid_price int,"
     " received_at long, processed_at long, device_os string,"
@@ -552,9 +501,9 @@ def decode_b64_proto(
     spec: Spec,
     out_schema: str,
     to_row: Callable[[dict[str, Any]], dict[str, Any]],
-    drop_default_instance: bool = True,
 ) -> DataFrame:
-    """`value` string column of Base64(wire bytes) -> typed rows."""
+    """`value` string column of Base64(wire bytes) -> typed rows; lines
+    that do not decode and default instances are dropped."""
     from pyspark.sql.types import _parse_datatype_string
 
     schema = _parse_datatype_string(out_schema)
@@ -569,7 +518,7 @@ def decode_b64_proto(
                     msg = decode_message(raw, spec)
                 except (WireError, ValueError):
                     continue  # malformed-drop (ProtoUtils try/catch)
-                if drop_default_instance and is_default_instance(msg, spec):
+                if is_default_instance(msg, spec):
                     continue  # F7 default-instance filter
                 rows.append(to_row(msg))
             yield pd.DataFrame(rows, columns=names)

@@ -85,11 +85,10 @@ def parse_example(payload: bytes) -> dict[str, list]:
 DOC_FEATURES = ("doc_id", "text", "lang", "source", "n_chars")
 
 
-def export_tfrecord_examples(
-    documents: DataFrame, out_dir: str, compress: bool = True
-) -> int:
-    """Write the documents table as tf.train.Example TFRecord shards
-    (one shard per partition — runner-chosen sharding). Returns the row
+def export_tfrecord_examples(documents: DataFrame, out_dir: str) -> int:
+    """Write the documents table as tf.train.Example gzip TFRecord shards
+    (one shard per partition — runner-chosen sharding), replacing any
+    shards an earlier export left in ``out_dir``. Returns the row
     count written. Map-only: each Arrow batch encodes to wire bytes in
     place; nothing shuffles."""
 
@@ -118,7 +117,7 @@ def export_tfrecord_examples(
         # persist first: count() + the shard write otherwise run the full
         # mapInPandas encode twice (doubling the export's CPU cost)
         n = framed.count()
-        write_tfrecord_partitioned(framed, out_dir, compress=compress)
+        write_tfrecord_partitioned(framed, out_dir)
     finally:
         framed.unpersist()
     return n

@@ -14,14 +14,16 @@ module implements the (public, simple) TFRecord framing directly:
 Spark-first shape: `spark.read.format("binaryFile")` parallelizes at file
 granularity — the correct unit, since gzip streams are not splittable
 (TFRecordIO has the same property) — and an Arrow-batched `mapInPandas`
-unframes each file into one `payload: binary` row per record. Composes
-with `protowire.decode_proto_payloads` for the reference's exact input
-path: bidlog*.tfrecord.gz -> BidLog rows with malformed-proto drop.
+unframes each file into one `payload: binary` row per record.
+`read_tfrecord_proto` composes it with the protowire decoder for the
+reference's exact input path: bidlog*.tfrecord.gz -> BidLog rows with
+malformed-proto drop.
 
-Corrupt framing (bad CRC, truncated record) raises TFRecordError and fails
-the read, matching TFRecordIO's IOException — framing corruption is a
-data-integrity event, unlike a malformed *payload*, which is dropped
-row-wise (ProtoUtils semantics).
+Both CRCs of every record are always verified. Corrupt framing (bad CRC,
+truncated record) raises TFRecordError and fails the read, matching
+TFRecordIO's IOException — framing corruption is a data-integrity event,
+unlike a malformed *payload*, which is dropped row-wise (ProtoUtils
+semantics).
 
 At 100 TB: one task per file; throughput scales with file count. The
 driver-side `write_tfrecord` exists for fixtures/interop; a distributed
@@ -173,7 +175,7 @@ def frame_records_many(payloads: list[bytes]) -> bytes:
     return b"".join(parts)
 
 
-def _unframe_stream(raw: bytes, verify_crc: bool = True) -> list[bytes]:
+def _unframe_stream(raw: bytes) -> list[bytes]:
     """All payloads of one TFRecord byte string — the batch twin of
     iter_tfrecords. The frame walk slices offsets sequentially (lengths
     chain), then BOTH CRC columns verify in one vectorized pass
@@ -206,7 +208,7 @@ def _unframe_stream(raw: bytes, verify_crc: bool = True) -> list[bytes]:
             )
         )
         pos += 16 + length
-    if ok and verify_crc and headers:
+    if ok and headers:
         want = np.empty(2 * len(headers), np.uint32)
         want[0::2] = masked_crc32c_many(headers)
         want[1::2] = masked_crc32c_many(payloads)
@@ -216,11 +218,11 @@ def _unframe_stream(raw: bytes, verify_crc: bool = True) -> list[bytes]:
     if not ok:
         # corrupt input: replay through the scalar reference path for its
         # exact first-error semantics (raises TFRecordError)
-        return list(iter_tfrecords(io.BytesIO(raw), verify_crc))
+        return list(iter_tfrecords(io.BytesIO(raw)))
     return payloads
 
 
-def iter_tfrecords(stream: io.BufferedIOBase, verify_crc: bool = True) -> Iterator[bytes]:
+def iter_tfrecords(stream: io.BufferedIOBase) -> Iterator[bytes]:
     """Yield payloads from a TFRecord byte stream; raise on corrupt framing."""
     while True:
         header = stream.read(12)
@@ -230,12 +232,12 @@ def iter_tfrecords(stream: io.BufferedIOBase, verify_crc: bool = True) -> Iterat
             raise TFRecordError("truncated record header")
         (length,) = _struct.unpack_from("<Q", header, 0)
         (len_crc,) = _struct.unpack_from("<I", header, 8)
-        if verify_crc and masked_crc32c(header[:8]) != len_crc:
+        if masked_crc32c(header[:8]) != len_crc:
             raise TFRecordError("length CRC mismatch")
-        # A corrupt header can declare any 64-bit length; bound it BEFORE
-        # read() so the lenient (verify_crc=False) path raises TFRecordError
-        # instead of OverflowError / a giant allocation. 1 GiB is far above
-        # any real record and far below anything read() could satisfy here.
+        # A header can declare any 64-bit length; bound it BEFORE read()
+        # so it raises TFRecordError instead of OverflowError / a giant
+        # allocation. 1 GiB is far above any real record and far below
+        # anything read() could satisfy here.
         if length > (1 << 30):
             raise TFRecordError(f"unreasonable record length {length}")
         payload = stream.read(length)
@@ -244,22 +246,20 @@ def iter_tfrecords(stream: io.BufferedIOBase, verify_crc: bool = True) -> Iterat
         tail = stream.read(4)
         if len(tail) < 4:
             raise TFRecordError("truncated payload CRC")
-        if verify_crc and masked_crc32c(payload) != _struct.unpack("<I", tail)[0]:
+        if masked_crc32c(payload) != _struct.unpack("<I", tail)[0]:
             raise TFRecordError("payload CRC mismatch")
         yield payload
 
 
-def write_tfrecord(path: str, payloads: list[bytes], compress: bool | None = None) -> None:
-    """Driver-side TFRecord writer (fixtures / interop). `compress=None`
-    infers gzip from a `.gz` suffix. Framing is the vectorized batch path
+def write_tfrecord(path: str, payloads: list[bytes]) -> None:
+    """Driver-side TFRecord writer (fixtures / interop), gzip iff the
+    path ends in `.gz`. Framing is the vectorized batch path
     (byte-identical to per-record framing); gzip at level 6 — zlib's
     default and what TFRecordIO-style writers ship — instead of
     gzip.open's level-9 default, which costs ~2x the CPU for ~1% size on
     these payloads. Any gzip reader decodes either identically."""
-    if compress is None:
-        compress = path.endswith(".gz")
     framed = frame_records_many(payloads)
-    if compress:
+    if path.endswith(".gz"):
         with _gzip.open(path, "wb", compresslevel=6) as f:
             f.write(framed)
     else:
@@ -267,11 +267,12 @@ def write_tfrecord(path: str, payloads: list[bytes], compress: bool | None = Non
             f.write(framed)
 
 
-def write_tfrecord_partitioned(
-    df: DataFrame, directory: str, column: str = "payload", compress: bool = True
-) -> None:
-    """Distributed TFRecord sink: one `part-<pid>.tfrecord[.gz]` shard per
-    partition (the runner-chosen-shards analogue of withNumShards(0)).
+def write_tfrecord_partitioned(df: DataFrame, directory: str) -> None:
+    """Distributed TFRecord sink: the `payload` column as one gzip
+    `part-<pid>.tfrecord.gz` shard per non-empty partition (the
+    runner-chosen-shards analogue of withNumShards(0)). Overwrites: the
+    shards of an earlier write to `directory` are removed first, so a
+    write with fewer partitions leaves none of the old shards behind.
 
     DataFrame-native: the shard index comes from a spark_partition_id()
     column and the per-partition write is an Arrow-batched mapInPandas
@@ -280,7 +281,8 @@ def write_tfrecord_partitioned(
     from pyspark.sql import functions as F
 
     os.makedirs(directory, exist_ok=True)
-    suffix = ".tfrecord.gz" if compress else ".tfrecord"
+    for stale in _glob.glob(os.path.join(directory, "part-*.tfrecord*")):
+        os.remove(stale)
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         payloads: list[bytes] = []
@@ -288,25 +290,21 @@ def write_tfrecord_partitioned(
         for pdf in batches:
             if len(pdf):
                 pid = int(pdf["__pid"].iloc[0])
-                payloads.extend(bytes(b) for b in pdf[column])
+                payloads.extend(bytes(b) for b in pdf["payload"])
         if payloads:
             write_tfrecord(
-                os.path.join(directory, f"part-{pid:05d}{suffix}"),
-                payloads,
-                compress=compress,
+                os.path.join(directory, f"part-{pid:05d}.tfrecord.gz"), payloads
             )
         return iter(())
 
     (
-        df.select(F.col(column), F.spark_partition_id().alias("__pid"))
+        df.select("payload", F.spark_partition_id().alias("__pid"))
         .mapInPandas(write_partition, schema="n long")
         .count()
     )
 
 
-def read_tfrecord(
-    spark: SparkSession, path_glob: str, verify_crc: bool = True
-) -> DataFrame:
+def read_tfrecord(spark: SparkSession, path_glob: str) -> DataFrame:
     """TFRecord source -> DataFrame[path string, payload binary].
 
     binaryFile gives (path, content) per file — one task per file, the
@@ -319,7 +317,7 @@ def read_tfrecord(
                 raw = bytes(content)
                 if path.endswith(".gz"):
                     raw = _gzip.decompress(raw)
-                payloads = _unframe_stream(raw, verify_crc)
+                payloads = _unframe_stream(raw)
                 yield pd.DataFrame(
                     {"path": [path] * len(payloads), "payload": payloads}
                 )
@@ -336,11 +334,11 @@ def read_tfrecord_proto(
     spec: Spec,
     out_schema: str,
     to_row: Callable[[dict[str, Any]], dict[str, Any]],
-    drop_default_instance: bool = True,
 ) -> DataFrame:
     """The reference's full input path: TFRecord(gzip) of serialized protos
     -> typed rows, dropping malformed payloads (BidLogJob.java:135 +
-    the parse try/catch at jobs1/BidLogJob.java:112-117)."""
+    the parse try/catch at jobs1/BidLogJob.java:112-117) and default
+    instances."""
     from pyspark.sql.types import _parse_datatype_string
 
     schema = _parse_datatype_string(out_schema)
@@ -358,10 +356,7 @@ def read_tfrecord_proto(
 
         def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
-                cols = decode_bidlog_rows(
-                    [bytes(p) for p in pdf["payload"]],
-                    drop_default_instance=drop_default_instance,
-                )
+                cols = decode_bidlog_rows([bytes(p) for p in pdf["payload"]])
                 yield pd.DataFrame({c: cols[c] for c in names})
 
         return records.mapInPandas(decode, schema=schema)
@@ -374,14 +369,10 @@ def read_tfrecord_proto(
                     msg = decode_message(bytes(payload), spec)
                 except WireError:
                     continue
-                if drop_default_instance and is_default_instance(msg, spec):
+                if is_default_instance(msg, spec):
                     continue
                 rows.append(to_row(msg))
             yield pd.DataFrame(rows, columns=names)
 
     return records.mapInPandas(decode, schema=schema)
 
-
-def local_tfrecord_paths(path_glob: str) -> list[str]:
-    """Expand a local glob (fixture helper)."""
-    return sorted(_glob.glob(path_glob))

@@ -43,30 +43,35 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-# (prefix, input key) -> the work dir behind the last lazy replay result
-# made for it; the next replay with the same pair deletes it first
-_REPLAY_SCRATCH: dict[tuple[str, str], str] = {}
+# (prefix, key) -> the scratch dir behind the last lazy result made for
+# that slot; the next claim of the same slot deletes it first
+_SCRATCH_SLOTS: dict[tuple[str, str], str] = {}
 
 
 @atexit.register
-def _drop_replay_scratch() -> None:
-    for work in _REPLAY_SCRATCH.values():
+def _drop_scratch_slots() -> None:
+    for work in _SCRATCH_SLOTS.values():
         shutil.rmtree(work, ignore_errors=True)
 
 
-def make_replay_dirs(prefix: str, input_key: str) -> tuple[str, str, str, str]:
-    """(work, sentinel_dir, out_dir, ckpt_dir) under one temp root.
-
-    The root backs the replay's lazy result until the next replay with
-    the same ``prefix`` and ``input_key`` (the replayed input) deletes it,
-    so a long-lived session keeps at most one work dir per replay kind
-    and input; whatever is left goes at interpreter exit."""
-    slot = (prefix, input_key)
-    prev = _REPLAY_SCRATCH.pop(slot, None)
+def scratch_slot(prefix: str, key: str) -> str:
+    """A fresh scratch dir (``scratch_dir(prefix)``) for a result that
+    reads it lazily. It lives until the next call with the same
+    ``prefix`` and ``key`` deletes it, so a long-lived session keeps at
+    most one dir per slot; whatever is left goes at interpreter exit."""
+    prev = _SCRATCH_SLOTS.pop((prefix, key), None)
     if prev is not None:
         shutil.rmtree(prev, ignore_errors=True)
     work = scratch_dir(prefix)
-    _REPLAY_SCRATCH[slot] = work
+    _SCRATCH_SLOTS[(prefix, key)] = work
+    return work
+
+
+def make_replay_dirs(prefix: str, input_key: str) -> tuple[str, str, str, str]:
+    """(work, sentinel_dir, out_dir, ckpt_dir) under one temp root, the
+    ``scratch_slot`` of this replay kind and input: it backs the replay's
+    lazy result until the next replay of the same kind and input."""
+    work = scratch_slot(prefix, input_key)
     sentinel_dir = os.path.join(work, "sentinel")
     out_dir = os.path.join(work, "out")
     ckpt_dir = os.path.join(work, "ckpt")

@@ -11,9 +11,9 @@ final state is the (row, bucket) sum across partials, which by the
 additive-merge law (test-pinned in tests/test_sketch_expectations.py)
 equals the batch sketch over the concatenated input under ANY slicing.
 
-State is bounded twice over: each partial is at most depth*width rows,
-and availableNow replays produce finitely many batch dirs that a real
-deployment compacts by summing into a single partial (same law).
+State is bounded: each partial is at most depth*width rows, and
+stream_cm_sketch replays a bounded input into a fresh scratch state dir
+that it deletes before returning.
 """
 
 from __future__ import annotations
@@ -45,69 +45,12 @@ def cm_partial_writer(state_dir: str, depth: int, width: int):
     return write_partial
 
 
-_COMMIT_MARKER = "_COMPACT_COMMIT"
-
-
-def _live_partial_dirs(state_dir: str) -> list[str]:
-    """The partial dirs the reader may see: batch=* EXCLUDING *.next
-    (in-flight compaction output is invisible until committed)."""
-    import glob
-
-    return sorted(
-        p
-        for p in glob.glob(os.path.join(state_dir, "batch=*"))
-        if not p.endswith(".next")
-    )
-
-
-def _finish_compaction(state_dir: str, marker: dict) -> None:
-    """Complete a COMMITTED compaction swap (idempotent, resumable from
-    any crash point after the marker was published): publish the .next
-    dir under its final name if that rename hasn't happened yet, then
-    delete the subsumed partials and finally the marker."""
-    import shutil
-
-    final = os.path.join(state_dir, marker["publish"])
-    nxt = final + ".next"
-    if os.path.isdir(nxt) and not os.path.isdir(final):
-        os.rename(nxt, final)
-    for name in marker["delete"]:
-        shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-    os.remove(os.path.join(state_dir, _COMMIT_MARKER))
-
-
-def _recover(state_dir: str) -> None:
-    """Make the state dir consistent after a compaction crash at ANY
-    point. Before the commit marker exists nothing was published, so
-    stale scratch (sibling *.compact-*.tmp dirs, in-tree *.next dirs)
-    is deleted and the original partials stand; after the marker exists
-    the compaction is committed, so it is rolled FORWARD via
-    _finish_compaction. Called by every reader and at the start of
-    every compaction — no entry point ever double-counts."""
-    import glob
-    import json
-    import shutil
-
-    if not os.path.isdir(state_dir):
-        return
-    mpath = os.path.join(state_dir, _COMMIT_MARKER)
-    if os.path.exists(mpath):
-        with open(mpath, encoding="utf-8") as fh:
-            _finish_compaction(state_dir, json.load(fh))
-    for stale in glob.glob(state_dir.rstrip(os.sep) + ".compact-*.tmp"):
-        shutil.rmtree(stale, ignore_errors=True)
-    for stale in glob.glob(os.path.join(state_dir, "batch=*.next")):
-        shutil.rmtree(stale, ignore_errors=True)
-
-
 def merged_cm_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Sum the per-batch partials into the final sketch state. Reads an
-    EXPLICIT list of live batch=* dirs (never *.next, never scratch), so
-    an in-flight or crashed compaction can neither double-count nor
-    hide counters; any interrupted compaction is first rolled forward or
-    rolled back by _recover."""
-    _recover(state_dir)
-    parts = _live_partial_dirs(state_dir)
+    """Sum the per-batch partials (every batch=<id> dir) into the final
+    sketch state."""
+    import glob
+
+    parts = sorted(glob.glob(os.path.join(state_dir, "batch=*")))
     if not parts:
         return spark.createDataFrame([], STATE_SCHEMA)
     return (
@@ -116,65 +59,6 @@ def merged_cm_state(spark: SparkSession, state_dir: str) -> DataFrame:
         .groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-
-
-def compact_cm_state(spark: SparkSession, state_dir: str) -> int:
-    """Collapse all live batch=<id> partials into ONE compacted partial —
-    the maintenance step that bounds a long-running stream's directory
-    count (partials grow one per micro-batch; state VALUES stay bounded
-    at depth*width regardless). By the additive-merge law the compacted
-    state merges with future partials exactly as the originals would.
-
-    Crash-safe write-ahead-commit protocol (each step leaves a state
-    _recover makes consistent, so a crash at any point neither loses
-    nor double-counts a counter):
-
-    1. _recover: finish/clean any prior interrupted compaction.
-    2. Sum the live partials into a SIBLING scratch dir OUTSIDE
-       state_dir (readers list state_dir, so scratch is unreachable).
-    3. Rename scratch to batch=compacted-<k>.next inside state_dir —
-       still invisible (readers exclude *.next). Crash ≤ here: originals
-       intact, scratch/.next deleted on next _recover (rollback).
-    4. COMMIT: atomically publish a marker file naming the .next dir to
-       publish and the exact partials it subsumes. Crash ≥ here:
-       _recover rolls the swap forward from the marker.
-    5. Rename .next to batch=compacted-<k>, delete the subsumed
-       partials, remove the marker.
-
-    Returns the number of partial dirs compacted away."""
-    import json
-
-    _recover(state_dir)
-    parts = _live_partial_dirs(state_dir)
-    if len(parts) <= 1:
-        return 0
-    gen = 1 + max(
-        (
-            int(os.path.basename(p).rsplit("-", 1)[1])
-            for p in parts
-            if os.path.basename(p).startswith("batch=compacted-")
-        ),
-        default=0,
-    )
-    scratch = state_dir.rstrip(os.sep) + f".compact-{gen}.tmp"
-    (
-        spark.read.schema(STATE_SCHEMA)
-        .parquet(*parts)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .write.mode("overwrite")
-        .parquet(scratch)
-    )
-    publish = f"batch=compacted-{gen}"
-    nxt = os.path.join(state_dir, publish + ".next")
-    os.rename(scratch, nxt)
-    marker = {"publish": publish, "delete": [os.path.basename(p) for p in parts]}
-    mtmp = os.path.join(state_dir, _COMMIT_MARKER + ".tmp")
-    with open(mtmp, "w", encoding="utf-8") as fh:
-        json.dump(marker, fh)
-    os.rename(mtmp, os.path.join(state_dir, _COMMIT_MARKER))
-    _finish_compaction(state_dir, marker)
-    return len(parts)
 
 
 def stream_cm_sketch(

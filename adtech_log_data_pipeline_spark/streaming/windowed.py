@@ -254,8 +254,7 @@ def streaming_device_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     first/last/count/distinct-type maintained by the state store — the
     streaming shape of the reference's Combine.perKey(mergeDps). All
     aggregates are exact (collect_set for the small event_type domain), so
-    the result is oracle-checkable; the HLL approximate variant lives in
-    operators/approx.py where it is tolerance-tested.
+    the result is oracle-checkable.
 
     A global (un-windowed) keyed aggregation can only emit in complete or
     update mode — complete + memory sink here because the bounded replay

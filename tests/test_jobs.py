@@ -6,9 +6,11 @@ import pytest
 
 from adtech_log_data_pipeline_spark.jobs import run_bidlog_job, run_prediction_job
 from adtech_log_data_pipeline_spark.operators import SuspiciousThresholds
-from adtech_log_data_pipeline_spark.sources.codecs import (
-    read_b64_json,
-    write_b64_text,
+from adtech_log_data_pipeline_spark.sources.protowire import (
+    DEVICE_ID,
+    OS_TO_NAME,
+    decode_b64_proto,
+    encode_b64_proto,
 )
 from tests.conftest import bid_log, bid_logs_df
 
@@ -174,57 +176,58 @@ def test_repeated_cli_path_jobs_keep_the_session_bounded(spark, tmp_path):
             assert predicate is first_memos[1], run
 
 
+def _write_b64(df, path):
+    from adtech_log_data_pipeline_spark.jobs.bidlog_job import _device_id
+
+    encode_b64_proto(df, DEVICE_ID, _device_id).write.mode("overwrite").text(path)
+
+
+def _read_b64(spark, path):
+    # a lambda pickles by value; Python workers cannot import this module
+    to_row = lambda msg: {"os": OS_TO_NAME[msg["os"]], "uuid": msg["uuid"]}
+    return decode_b64_proto(spark.read.text(path), DEVICE_ID, "os string, uuid string", to_row)
+
+
 def test_b64_codec_roundtrip_drops_malformed(spark, tmp_path):
     df = spark.createDataFrame([("ANDROID", "U1"), ("IOS", "U2")], "os string, uuid string")
     path = str(tmp_path / "b64")
-    write_b64_text(df, path)
-    # append a malformed line artifact (the reference's empty-line case, F7)
+    _write_b64(df, path)
+    # append malformed line artifacts (the reference's empty-line case, F7)
     with open(f"{path}/part-malformed.txt", "w") as f:
         f.write("!!!not-base64!!!\n")
-        f.write("aGVsbG8=\n")  # valid base64, not valid JSON
-    back = read_b64_json(spark, path, "os string, uuid string")
+        f.write("aGVsbG8=\n")  # valid base64, not a valid DeviceId
+        f.write("\n")  # empty line: the default instance
+    back = _read_b64(spark, path)
     assert {(r["os"], r["uuid"]) for r in back.collect()} == {("ANDROID", "U1"), ("IOS", "U2")}
 
 
-def test_jsonl_roundtrip_and_malformed_modes(spark, tmp_path):
-    """read_jsonl is the read side of write_json_text: round-trip equality,
-    DROPMALFORMED silently drops corrupt lines, PERMISSIVE quarantines
-    them in _corrupt_record, FAILFAST raises."""
-    from adtech_log_data_pipeline_spark.sources.codecs import (
-        read_jsonl,
-        write_json_text,
+def test_bidlog_job_b64_sink_is_the_suspicious_sink_as_device_id_lines(spark, tmp_path):
+    """--b64-outputs writes the reference's S4 format: one Base64
+    DeviceId protobuf line per suspicious ID (IOUtils.encodeB64AndWrite),
+    decodable by any protobuf reader, holding exactly the parquet
+    suspicious sink's (os, uuid) set."""
+    import base64
+
+    from adtech_log_data_pipeline_spark.plans.queries import QUERY_THRESHOLDS
+    from adtech_log_data_pipeline_spark.sources.bidlogs import load_bid_logs
+    from adtech_log_data_pipeline_spark.sources.protowire import decode_message
+
+    out = str(tmp_path)
+    run_bidlog_job(
+        spark,
+        load_bid_logs(spark, "/root/testdata/sf0.01"),
+        output_dir=out,
+        thresholds=QUERY_THRESHOLDS,
+        b64_outputs=True,
     )
-
-    df = spark.createDataFrame(
-        [("ANDROID", "U1", 3), ("IOS", "U2", 5)], "os string, uuid string, n long"
-    )
-    path = str(tmp_path / "jsonl")
-    write_json_text(df, path)
-    with open(f"{path}/part-malformed.txt", "w") as f:
-        f.write('{"os": "IOS", "uuid": "U3", "n": }\n')  # broken JSON
-        f.write("not json at all\n")
-
-    schema = "os string, uuid string, n long"
-    dropped = read_jsonl(spark, path, schema)  # DROPMALFORMED default
-    assert {(r["os"], r["uuid"], r["n"]) for r in dropped.collect()} == {
-        ("ANDROID", "U1", 3),
-        ("IOS", "U2", 5),
+    lines = [r["value"] for r in spark.read.text(f"{out}/suspicious_b64").collect()]
+    decoded = [decode_message(base64.b64decode(line), DEVICE_ID) for line in lines]
+    got = [(OS_TO_NAME[m["os"]], m["uuid"]) for m in decoded]
+    want = {
+        (r["os"], r["uuid"]) for r in spark.read.parquet(f"{out}/suspicious").collect()
     }
-
-    # Spark disallows querying ONLY _corrupt_record from the raw scan
-    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); its
-    # documented workaround is caching the parsed frame first
-    perm = read_jsonl(spark, path, schema, mode="PERMISSIVE").cache()
-    assert perm.count() == 4
-    corrupt = perm.filter("_corrupt_record IS NOT NULL")
-    assert corrupt.count() == 2
-    assert "not json at all" in {
-        r["_corrupt_record"] for r in corrupt.collect()
-    }
-
-    perm.unpersist()
-    with pytest.raises(Exception):
-        read_jsonl(spark, path, schema, mode="FAILFAST").collect()
+    assert len(got) == len(set(got)) == len(want) > 0
+    assert set(got) == want
 
 
 def test_export_job_cli_end_to_end(spark, tmp_path):
@@ -275,51 +278,18 @@ def test_bidlog_and_prediction_cli_report_sink_counts(spark, tmp_path, capsys):
     assert m and int(m.group(1)) == rows(pred, "predictions") > 0
 
 
-def test_read_jsonl_fuzzed_garbage_lines(spark, tmp_path):
-    """Totality of the JSONL postures over garbage input: DROPMALFORMED
-    keeps exactly the valid rows, PERMISSIVE quarantines every bad line
-    with its raw text, FAILFAST raises — for lines that are invalid JSON,
-    wrong-typed, truncated, or raw bytes."""
-    import pytest
-
-    lines = [
-        '{"id": 1, "v": "ok"}',
-        "{not json",
-        '{"id": "not-an-int", "v": "x"}',
-        '{"id": 3',
-        "\x00\x01garbage\xff",
-        '{"id": 2, "v": "also ok"}',
-    ]
-    p = tmp_path / "fuzz.jsonl"
-    p.write_text("\n".join(lines), encoding="utf-8", errors="ignore")
-    from adtech_log_data_pipeline_spark.sources.codecs import read_jsonl
-
-    schema = "id long, v string"
-    kept = read_jsonl(spark, str(p), schema, mode="DROPMALFORMED").collect()
-    assert sorted((r["id"], r["v"]) for r in kept) == [(1, "ok"), (2, "also ok")]
-
-    perm = read_jsonl(spark, str(p), schema, mode="PERMISSIVE").cache()
-    bad = perm.filter("_corrupt_record IS NOT NULL").count()
-    assert bad == len(lines) - 2
-    perm.unpersist()
-
-    with pytest.raises(Exception):
-        read_jsonl(spark, str(p), schema, mode="FAILFAST").collect()
-
-
 def test_b64_codec_long_payload_single_line(spark, tmp_path):
-    """Regression: Spark's base64() MIME-chunks at 76 chars with CRLF —
-    a long record must still land as ONE text line and round-trip (it
-    used to split into two malformed lines and vanish on read)."""
-    long_text = "word " * 100
-    df = spark.createDataFrame([(1, long_text)], "id long, t string")
+    """A record whose Base64 line runs past 76 characters (where MIME
+    encoders break lines) still lands as ONE text line and round-trips."""
+    long_uuid = "U" * 300
+    df = spark.createDataFrame([("IOS", long_uuid)], "os string, uuid string")
     path = str(tmp_path / "b64long")
-    write_b64_text(df, path)
+    _write_b64(df, path)
     lines = spark.read.text(path).collect()
-    assert len(lines) == 1
+    assert len(lines) == 1 and len(lines[0]["value"]) > 76
     assert "\r" not in lines[0]["value"]
-    back = read_b64_json(spark, path, "id long, t string").collect()
-    assert len(back) == 1 and back[0]["t"] == long_text
+    back = _read_b64(spark, path).collect()
+    assert [(r["os"], r["uuid"]) for r in back] == [("IOS", long_uuid)]
 
 
 def test_bigquery_sink_routing(spark, tmp_path):

@@ -8,11 +8,10 @@ import pytest
 from adtech_log_data_pipeline_spark.sources.media import (
     decode_png,
     decode_wav,
-    encode_png,
-    encode_wav,
     is_png,
     is_wav,
 )
+from media_fixtures import encode_bmp, encode_png, encode_wav
 
 
 def test_png_roundtrip_rgb():
@@ -153,47 +152,9 @@ def test_png_roundtrip_fuzz():
     law()
 
 
-def test_resize_png_real_resample():
-    from adtech_log_data_pipeline_spark.sources.media import resize_png
-
-    # 100x40 gradient: resize to fit 50 -> 50x20
-    w, h = 100, 40
-    pixels = bytes((x % 256) for y in range(h) for x in range(w) for _ in range(3))
-    big = encode_png(w, h, pixels, color_type=2)
-    small = decode_png(resize_png(big, 50))
-    assert (small["width"], small["height"]) == (50, 20)
-    # nearest-neighbor law: target pixel (tx, ty) == source ((tx*w)//tw, (ty*h)//th)
-    for tx in (0, 13, 49):
-        sx = (tx * w) // 50
-        assert small["pixels"][3 * tx] == sx % 256
-    # already-fitting image passes through byte-identical
-    assert resize_png(small_png := encode_png(8, 8, bytes(8 * 8 * 3)), 50) == small_png
-
-
-def test_resize_images_spark_stage(spark):
-    from adtech_log_data_pipeline_spark.functions.multimodal import resize_images
-    from adtech_log_data_pipeline_spark.sources.media import decode_png
-
-    big = encode_png(300, 120, bytes(300 * 120 * 3), color_type=2)
-    small = encode_png(16, 16, bytes(16 * 16 * 3), color_type=2)
-    df = spark.createDataFrame(
-        [(1, bytearray(big)), (2, bytearray(small)), (3, bytearray(b"text blob"))],
-        "doc_id long, blob binary",
-    )
-    out = {r["doc_id"]: r for r in resize_images(df, max_dim=100).collect()}
-    assert (out[1]["width"], out[1]["height"], out[1]["resized"]) == (100, 40, True)
-    meta = decode_png(bytes(out[1]["blob"]))
-    assert (meta["width"], meta["height"]) == (100, 40)
-    assert out[2]["resized"] is False and out[2]["width"] == 16
-    assert out[3]["width"] == -1 and bytes(out[3]["blob"]) == b"text blob"
-
-
 class TestBmp:
     def test_roundtrip_all_pixels(self):
-        from adtech_log_data_pipeline_spark.sources.media import (
-            decode_bmp,
-            encode_bmp,
-        )
+        from adtech_log_data_pipeline_spark.sources.media import decode_bmp
 
         # widths 1..5 exercise every row-padding case (stride % 4)
         for w in range(1, 6):
@@ -206,7 +167,6 @@ class TestBmp:
         from adtech_log_data_pipeline_spark.functions.multimodal import (
             decode_media,
         )
-        from adtech_log_data_pipeline_spark.sources.media import encode_bmp
 
         b = encode_bmp(4, 2, bytes(24))
         assert decode_media(b, fake=False) == (4, 2, "bmp")

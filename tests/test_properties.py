@@ -343,31 +343,41 @@ def test_table_profile_matches_python_truth(spark, vals):
 @given(
     rows=st.lists(
         st.tuples(
-            st.integers(-(2**62), 2**62) | st.none(),
-            st.text(max_size=12) | st.none(),  # incl. newlines, quotes, unicode
+            st.sampled_from(["UNKNOWN_OS_TYPE", "ANDROID", "IOS"]),
+            st.text(max_size=12),  # incl. newlines, quotes, unicode
         ),
         min_size=1,
         max_size=12,
     )
 )
 def test_b64_codec_roundtrip_law(spark, rows, tmp_path_factory):
-    """write_b64_text -> read_b64_json is the identity for ANY rows except
-    all-null ones (which serialize to {} and are dropped by the
-    default-instance filter, the documented F7 semantics) — newlines and
-    quotes in text values must survive the line-oriented sink."""
-    from adtech_log_data_pipeline_spark.sources.codecs import (
-        read_b64_json,
-        write_b64_text,
+    """Base64 DeviceId lines written as BidLogJob's b64 sink writes them
+    read back through decode_b64_proto as the identity for ANY rows
+    except default instances (UNKNOWN_OS_TYPE with an empty uuid, which
+    encode to an empty line and are dropped, the documented F7
+    semantics) — newlines and quotes in text values must survive the
+    line-oriented sink."""
+    from collections import Counter
+
+    from adtech_log_data_pipeline_spark.jobs.bidlog_job import _device_id
+    from adtech_log_data_pipeline_spark.sources.protowire import (
+        DEVICE_ID,
+        OS_TO_NAME,
+        decode_b64_proto,
+        encode_b64_proto,
     )
 
     d = str(tmp_path_factory.mktemp("b64rt"))
-    df = spark.createDataFrame(rows, "id long, t string")
-    write_b64_text(df, d)
-    back = read_b64_json(spark, d, "id long, t string")
-    from collections import Counter
-
-    got = Counter((r["id"], r["t"]) for r in back.collect())
-    want = Counter((i, t) for i, t in rows if not (i is None and t is None))
+    df = spark.createDataFrame(rows, "os string, uuid string")
+    encode_b64_proto(df, DEVICE_ID, _device_id).write.mode("overwrite").text(d)
+    back = decode_b64_proto(
+        spark.read.text(d),
+        DEVICE_ID,
+        "os string, uuid string",
+        lambda m: {"os": OS_TO_NAME[m["os"]], "uuid": m["uuid"]},
+    )
+    got = Counter((r["os"], r["uuid"]) for r in back.collect())
+    want = Counter(r for r in rows if r != ("UNKNOWN_OS_TYPE", ""))
     assert got == want
 
 

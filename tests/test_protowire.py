@@ -10,16 +10,27 @@ from adtech_log_data_pipeline_spark.sources.protowire import (
     APP_PROFILE,
     DEVICE_ID,
     DEVICE_PROFILE,
-    DEVICE_PROFILE_SQL_SCHEMA,
+    NAME_TO_OS,
+    OS_TO_NAME,
     WireError,
     decode_b64_proto,
     decode_message,
-    device_profile_to_row,
     encode_b64_proto,
     encode_message,
     is_default_instance,
-    row_to_device_profile,
 )
+
+DEVICE_ID_SQL_SCHEMA = "os string, uuid string"
+
+
+def device_id_mappers():
+    """(row -> DeviceId, DeviceId -> row). Built per call: functions of a
+    test module pickle by reference, and Python workers cannot import
+    the test module."""
+    return (
+        lambda row: {"os": NAME_TO_OS[row["os"]], "uuid": row["uuid"]},
+        lambda msg: {"os": OS_TO_NAME[msg["os"]], "uuid": msg["uuid"]},
+    )
 
 
 def small_profile():
@@ -102,75 +113,44 @@ def test_default_instance_detection():
 
 
 def test_spark_roundtrip_and_malformed_drop(spark):
-    """Nested profiles -> Base64 wire lines -> decode: exact roundtrip;
+    """DeviceIds -> Base64 wire lines -> decode: exact roundtrip;
     injected garbage / truncated / default-instance lines are dropped."""
     rows = [
-        {
-            "os": "ANDROID",
-            "uuid": "ABCDEFAB-1234-5678-9ABC-DEF012345678",
-            "first_at": 100,
-            "last_at": 900,
-            "apps": [
-                {"bundle": "a", "first_at": 100, "last_at": 900,
-                 "count_per_exchange": {1: 2, 21: 3}},
-                {"bundle": "B", "first_at": 150, "last_at": 800,
-                 "count_per_exchange": {22: 1}},
-            ],
-            "geos": [{"country": "USA", "region": "ca"},
-                     {"country": "usa", "region": "ca"}],
-        },
-        {
-            "os": "IOS",
-            "uuid": "00000000-0000-4000-8000-000000000001",
-            "first_at": 5,
-            "last_at": 5,
-            "apps": [{"bundle": "solo", "first_at": 5, "last_at": 5,
-                      "count_per_exchange": {2: 1}}],
-            "geos": [],
-        },
+        {"os": "ANDROID", "uuid": "ABCDEFAB-1234-5678-9ABC-DEF012345678"},
+        {"os": "IOS", "uuid": "00000000-0000-4000-8000-000000000001"},
     ]
-    df = spark.createDataFrame(rows, schema=DEVICE_PROFILE_SQL_SCHEMA)
-    encoded = encode_b64_proto(df, DEVICE_PROFILE, row_to_device_profile)
+    row_to_device_id, device_id_to_row = device_id_mappers()
+    df = spark.createDataFrame(rows, schema=DEVICE_ID_SQL_SCHEMA)
+    encoded = encode_b64_proto(df, DEVICE_ID, row_to_device_id)
+    golden = encode_message(row_to_device_id(rows[0]), DEVICE_ID)
 
     garbage = spark.createDataFrame(
         [
             ("!!!not-base64!!!",),
-            (base64.b64encode(GOLDEN[:-1]).decode(),),  # truncated wire
+            (base64.b64encode(golden[:-1]).decode(),),  # truncated wire
             (base64.b64encode(b"").decode(),),          # default instance
         ],
         "value string",
     )
     decoded = decode_b64_proto(
         encoded.unionByName(garbage),
-        DEVICE_PROFILE,
-        DEVICE_PROFILE_SQL_SCHEMA,
-        device_profile_to_row,
+        DEVICE_ID,
+        DEVICE_ID_SQL_SCHEMA,
+        device_id_to_row,
     )
-    got = sorted(
-        (r.asDict(recursive=True) for r in decoded.collect()),
-        key=lambda r: r["uuid"],
-    )
-    want = sorted(rows, key=lambda r: r["uuid"])
-    # map columns come back as plain dicts; geo/app order is preserved
-    assert got == want
+    got = sorted((r.asDict() for r in decoded.collect()), key=lambda r: r["uuid"])
+    assert got == sorted(rows, key=lambda r: r["uuid"])
 
 
 def test_spark_decode_interops_with_python_encoder(spark):
     """Lines produced by the raw Python encoder (simulating the reference's
     Java writer) decode through the Spark path bit-exactly."""
-    line = base64.b64encode(encode_message(small_profile(), DEVICE_PROFILE))
+    line = base64.b64encode(encode_message({"os": 2, "uuid": "A"}, DEVICE_ID))
     df = spark.createDataFrame([(line.decode(),)], "value string")
     out = decode_b64_proto(
-        df, DEVICE_PROFILE, DEVICE_PROFILE_SQL_SCHEMA, device_profile_to_row
+        df, DEVICE_ID, DEVICE_ID_SQL_SCHEMA, device_id_mappers()[1]
     ).collect()
-    assert len(out) == 1
-    assert out[0]["uuid"] == "A"
-    assert out[0]["apps"][0]["count_per_exchange"] == {1: 2}
-
-
-def test_device_profile_row_mapping_is_inverse():
-    row = device_profile_to_row(small_profile())
-    assert row_to_device_profile(row) == small_profile()
+    assert [r.asDict() for r in out] == [{"os": "IOS", "uuid": "A"}]
 
 
 from hypothesis import given, settings

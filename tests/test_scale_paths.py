@@ -1,38 +1,7 @@
-"""Scale-path utilities: approximate aggregates stay within tolerance of
-exact results; bucketed tables join without a shuffle exchange."""
+"""Scale-path utilities: bucketed tables join without a shuffle
+exchange."""
 
-import pytest
 from pyspark.sql import functions as F
-
-from adtech_log_data_pipeline_spark.operators.approx import (
-    approx_app_user_counts,
-    device_activity_percentiles,
-)
-from adtech_log_data_pipeline_spark.operators import valid_bid_logs
-from adtech_log_data_pipeline_spark.sources.bidlogs import load_bid_logs
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_approx_user_counts_within_tolerance(spark):
-    v = valid_bid_logs(load_bid_logs(spark, SF))
-    exact = {
-        r["bundle"]: r["n"]
-        for r in v.groupBy(F.col("app_bundle").alias("bundle"))
-        .agg(F.countDistinct("os", "uuid").alias("n"))
-        .collect()
-    }
-    approx = {r["bundle"]: r["approx_users"] for r in approx_app_user_counts(v).collect()}
-    assert set(approx) == set(exact)
-    for b, n in exact.items():
-        assert abs(approx[b] - n) <= max(2, 0.1 * n)
-
-
-def test_activity_percentiles_ordered(spark):
-    v = valid_bid_logs(load_bid_logs(spark, SF))
-    row = device_activity_percentiles(v).collect()[0]
-    p50, p90, p99 = row["p50_p90_p99"]
-    assert p50 <= p90 <= p99 <= row["max_bids"]
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):

@@ -595,136 +595,6 @@ def test_cm_partial_writer_batch_retry_is_exactly_once(spark, tmp_path):
     assert got == expected
 
 
-def test_cm_state_compaction_preserves_merge(spark, tmp_path):
-    """Offline compaction of batch partials: merged state is unchanged,
-    later partials still merge correctly, and re-compaction is
-    idempotent."""
-    from adtech_log_data_pipeline_spark.functions.sketch import cm_sketch_state
-    from adtech_log_data_pipeline_spark.streaming.cm_stream import (
-        cm_partial_writer,
-        compact_cm_state,
-        merged_cm_state,
-    )
-
-    state = str(tmp_path / "state")
-    write = cm_partial_writer(state, 4, 512)
-    batches = [
-        spark.createDataFrame([(i % (5 + b),) for i in range(30)], "user_id long")
-        for b in range(4)
-    ]
-    for b, df in enumerate(batches[:3]):
-        write(df, b)
-    before = {tuple(r) for r in merged_cm_state(spark, state).collect()}
-    assert compact_cm_state(spark, state) == 3
-    assert {tuple(r) for r in merged_cm_state(spark, state).collect()} == before
-    assert compact_cm_state(spark, state) == 0  # single dir: no-op
-    write(batches[3], 3)  # a later batch merges on top of the compacted state
-    expected = {
-        tuple(r)
-        for r in cm_sketch_state(
-            batches[0].unionByName(batches[1])
-            .unionByName(batches[2]).unionByName(batches[3]),
-            "user_id",
-        ).collect()
-    }
-    assert {tuple(r) for r in merged_cm_state(spark, state).collect()} == expected
-
-
-def test_cm_compaction_crash_recovery_at_every_stage(spark, tmp_path):
-    """The compaction write-ahead-commit protocol: a crash at ANY stage
-    leaves a state that merged_cm_state reads correctly (roll BACK
-    before the commit marker, roll FORWARD after it) — the advisor's
-    double-count scenario (stale .next read alongside the originals)
-    is structurally impossible because readers list live dirs only."""
-    import json
-    import shutil
-
-    from adtech_log_data_pipeline_spark.functions.sketch import cm_sketch_state
-    from adtech_log_data_pipeline_spark.streaming.cm_stream import (
-        _COMMIT_MARKER,
-        cm_partial_writer,
-        compact_cm_state,
-        merged_cm_state,
-    )
-
-    def fresh_state(path):
-        shutil.rmtree(path, ignore_errors=True)
-        write = cm_partial_writer(str(path), 4, 512)
-        for b in range(3):
-            write(
-                spark.createDataFrame(
-                    [(i % (5 + b),) for i in range(30)], "user_id long"
-                ),
-                b,
-            )
-
-    state = tmp_path / "state"
-    fresh_state(state)
-    expected = {tuple(r) for r in merged_cm_state(spark, str(state)).collect()}
-
-    # Stage A: crash after the scratch write, before the .next rename —
-    # a stale sibling scratch dir exists OUTSIDE state_dir. Reader must
-    # see the untouched originals and clean the scratch.
-    scratch = tmp_path / "state.compact-1.tmp"
-    scratch.mkdir()
-    (scratch / "junk.parquet").write_bytes(b"not parquet")
-    got = {tuple(r) for r in merged_cm_state(spark, str(state)).collect()}
-    assert got == expected and not scratch.exists()
-
-    # Stage B: crash after the .next rename, before the commit marker —
-    # an UNCOMMITTED batch=compacted-1.next sits alongside the original
-    # partials. Reader must ignore it (no double count) and roll it back.
-    nxt = state / "batch=compacted-1.next"
-    merged_cm_state(spark, str(state)).write.mode("overwrite").parquet(str(nxt))
-    got = {tuple(r) for r in merged_cm_state(spark, str(state)).collect()}
-    assert got == expected and not nxt.exists()
-
-    # Stage C: crash after the commit marker, before the publish rename —
-    # marker + .next exist, originals still present. Reader must roll
-    # FORWARD: publish the compacted dir, delete the subsumed partials.
-    merged_cm_state(spark, str(state)).write.mode("overwrite").parquet(str(nxt))
-    marker = {
-        "publish": "batch=compacted-1",
-        "delete": ["batch=0", "batch=1", "batch=2"],
-    }
-    (state / _COMMIT_MARKER).write_text(json.dumps(marker))
-    got = {tuple(r) for r in merged_cm_state(spark, str(state)).collect()}
-    assert got == expected
-    assert (state / "batch=compacted-1").is_dir() and not nxt.exists()
-    assert not (state / "batch=0").exists()
-    assert not (state / _COMMIT_MARKER).exists()
-
-    # Stage D: crash after the publish rename, mid-delete — marker +
-    # published dir + a leftover subsumed partial. Roll-forward deletes
-    # the leftover exactly once (its counts live in the compacted dir).
-    fresh_state(state)
-    assert compact_cm_state(spark, str(state)) == 3
-    # reconstruct the post-publish pre-delete crash state
-    write = cm_partial_writer(str(state), 4, 512)
-    write(spark.createDataFrame([(1,), (2,)], "user_id long"), 9)
-    (state / _COMMIT_MARKER).write_text(
-        json.dumps({"publish": "batch=compacted-1", "delete": ["batch=9"]})
-    )
-    got = {tuple(r) for r in merged_cm_state(spark, str(state)).collect()}
-    base = {
-        tuple(r)
-        for r in cm_sketch_state(
-            spark.createDataFrame(
-                [(i % (5 + b),) for b in range(3) for i in range(30)],
-                "user_id long",
-            ),
-            "user_id",
-        ).collect()
-    }
-    assert got == base  # batch=9's counts dropped WITH its dir: committed
-    # delete list is authoritative, so no partial double-application
-
-    # And a second compaction generation numbers itself past the first.
-    write(spark.createDataFrame([(3,)], "user_id long"), 10)
-    assert compact_cm_state(spark, str(state)) == 2
-    assert (state / "batch=compacted-2").is_dir()
-
-
 def test_join_view_multibatch_equals_closed_form(spark, replay_dir):
     """IVM over a 4-batch replay: the bilinear delta accumulation must
     converge to count(click) x count(purchase) per user — the closed

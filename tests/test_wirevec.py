@@ -13,7 +13,13 @@ round's bit-exactness contracts:
     including which rows drop;
   * crc32c_many == crc32c per element on empty/skewed/over-cap batches
     (r13 ADVICE #2/#4), and frame_records_many == concat of per-record
-    framing, roundtripped through _unframe_stream with corruption raising.
+    framing, roundtripped through _unframe_stream with corruption raising;
+  * the encode and CRC equalities as hypothesis properties: arbitrary
+    rows (None/empty/non-ASCII strings, boundary ints of each declared
+    type) encode byte for byte as the scalar encoder does, a batch the
+    fast encoder refuses falls back to the scalar encoder, and
+    crc32c_many / masked_crc32c_many equal the scalar CRCs over
+    arbitrary payload lists, empty payloads included.
 """
 
 from __future__ import annotations
@@ -308,3 +314,100 @@ def test_decode_bidlog_rows_matches_scalar_on_arbitrary_bytes(payloads):
 @given(payloads=_mutated_payloads)
 def test_decode_bidlog_rows_matches_scalar_on_mutated_bidlogs(payloads):
     _assert_decoders_agree(payloads)
+
+
+# --- differential properties: vectorized encode and CRC vs the scalar code -
+
+_INT_COLS = ("exchange", "bid_result", "bid_price", "received_at", "processed_at")
+_INT32_COLS = ("exchange", "bid_result", "bid_price")
+
+
+def _bounded(lo: int, hi: int) -> st.SearchStrategy[int]:
+    """Any int of the declared range, with its edges and the varint
+    size boundaries drawn often."""
+    edges = [lo, lo + 1, -1, 0, 1, 127, 128, 16383, 16384, 2**31 - 1, hi - 1, hi]
+    return st.sampled_from([e for e in edges if lo <= e <= hi]) | st.integers(lo, hi)
+
+
+_text_or_none = st.none() | st.text(max_size=40)
+
+_encode_row = st.fixed_dictionaries(
+    {
+        "bid_id": _text_or_none,
+        "exchange": _bounded(-(2**31), 2**31 - 1),
+        "bid_result": _bounded(-(2**31), 2**31 - 1),
+        "bid_price": _bounded(-(2**31), 2**31 - 1),
+        "received_at": _bounded(-(2**63), 2**63 - 1),
+        "processed_at": _bounded(-(2**63), 2**63 - 1),
+        "device_os": _text_or_none,
+        "device_ifa": _text_or_none,
+        "app_bundle": st.none() | st.text(max_size=300),
+        "geo_country": _text_or_none,
+        "geo_region": _text_or_none,
+    }
+)
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=st.lists(_encode_row, min_size=1, max_size=12))
+def test_encode_bidlog_rows_matches_scalar_on_arbitrary_rows(rows):
+    pdf = pd.DataFrame(rows, columns=list(BIDLOG_COLS))
+    assert all(np.issubdtype(pdf[c].dtype, np.integer) for c in _INT_COLS)
+    assert encode_bidlog_rows(pdf) == _scalar_encode(rows)
+
+
+@settings(max_examples=100, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    rows=st.lists(_encode_row, min_size=1, max_size=8),
+    col=st.sampled_from(_INT32_COLS),
+)
+def test_encode_bidlog_rows_refuses_a_float_column(rows, col):
+    """A batch whose int column arrives as float64 (an int32 column read
+    through a double) is refused by the fast encoder, so the scalar
+    encoder, which takes int(v), encodes it to the same bytes."""
+    pdf = pd.DataFrame(rows, columns=list(BIDLOG_COLS))
+    pdf[col] = pdf[col].astype(np.float64)
+    assert encode_bidlog_rows(pdf) is None
+    assert [
+        encode_message(row_to_bidlog(r), BID_LOG) for r in pdf.to_dict("records")
+    ] == _scalar_encode(rows)
+
+
+def test_encode_wire_proto_takes_the_scalar_path_for_a_refused_batch(spark):
+    """Through Spark: a double-typed bid_price makes the fast encoder
+    refuse each batch, and the encoded payloads are the scalar bytes."""
+    from adtech_log_data_pipeline_spark.sources.protowire import (
+        BID_LOG_SQL_SCHEMA,
+        encode_wire_proto,
+    )
+
+    rows = [_rand_row(random.Random(seed)) for seed in range(20)]
+    schema = BID_LOG_SQL_SCHEMA.replace("bid_price int", "bid_price double")
+    names = [f.split()[0] for f in schema.split(",")]
+    df = spark.createDataFrame(
+        [tuple(float(r[c]) if c == "bid_price" else r[c] for c in names) for r in rows],
+        schema,
+    )
+    got = [bytes(r["payload"]) for r in encode_wire_proto(df, BID_LOG, row_to_bidlog).collect()]
+    assert sorted(got) == sorted(_scalar_encode(rows))
+
+
+@settings(max_examples=200, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    payloads=st.lists(st.binary(max_size=300), max_size=24),
+    cap=st.sampled_from([None, 64]),
+)
+def test_crc32c_many_matches_scalar_on_arbitrary_payloads(payloads, cap):
+    """Both vectorized CRCs equal the scalar ones element for element,
+    with the dense walk and (cap=64) the length-sorted slice walk."""
+    saved = tfr._CRC_MATRIX_CAP
+    if cap is not None:
+        tfr._CRC_MATRIX_CAP = cap
+    try:
+        crc = tfr.crc32c_many(payloads)
+        masked = tfr.masked_crc32c_many(payloads)
+    finally:
+        tfr._CRC_MATRIX_CAP = saved
+    assert crc.dtype == masked.dtype == np.uint32
+    assert crc.tolist() == [tfr.crc32c(p) for p in payloads]
+    assert masked.tolist() == [tfr.masked_crc32c(p) for p in payloads]
